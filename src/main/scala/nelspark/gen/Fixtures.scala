@@ -21,8 +21,8 @@ import nelspark.functions._
  * engines read the same fixture bytes, a stale fixture from an older
  * kernel version would satisfy the oracle vacuously. Each fixture dir
  * therefore carries a `_FIXTURE_TAG` sidecar = md5(generation params |
- * md5 of every compiled class under nelspark/expr | input parquet file
- * metadata). A recompiled kernel, changed params, or regenerated input
+ * md5 of every compiled class under [[kernelPackages]] | input parquet
+ * file metadata). A recompiled kernel, changed params, or regenerated input
  * all change the tag, and a mismatch regenerates the fixture atomically
  * (temp dir + rename, the Conll.ensureShards contract) — no manual `rm`
  * needed, and readers never observe a half-written fixture.
@@ -47,20 +47,27 @@ object Fixtures {
     val md = java.security.MessageDigest.getInstance("MD5")
     val loc = new File(nelspark.expr.Kernels.getClass
       .getProtectionDomain.getCodeSource.getLocation.toURI)
+    import scala.jdk.CollectionConverters._
     if (loc.isDirectory) {
-      // sort by full relative path so dir and jar execution hash the
-      // class bytes in the same (global) order
+      // walk each package recursively and sort by path relative to the
+      // classes dir, so dir and jar execution hash the same class files
+      // (subpackages included) in the same (global) order
+      val base = loc.toPath
       kernelPackages.flatMap { pkg =>
-        val base = new File(loc, pkg)
-        Option(base.listFiles()).getOrElse(Array.empty[File])
-          .filter(_.getName.endsWith(".class"))
-          .map(f => (pkg + f.getName, f))
+        val dir = base.resolve(pkg)
+        if (!Files.isDirectory(dir)) Nil
+        else {
+          val walk = Files.walk(dir)
+          try walk.iterator().asScala
+            .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".class"))
+            .map(p => (base.relativize(p).iterator().asScala.mkString("/"), p)).toList
+          finally walk.close()
+        }
       }.sortBy(_._1)
-        .foreach { case (_, f) => md.update(Files.readAllBytes(f.toPath)) }
+        .foreach { case (_, p) => md.update(Files.readAllBytes(p)) }
     } else {
       val zip = new java.util.zip.ZipFile(loc)
       try {
-        import scala.jdk.CollectionConverters._
         zip.entries().asScala
           .filter(e => kernelPackages.exists(e.getName.startsWith) &&
             e.getName.endsWith(".class"))

@@ -116,28 +116,10 @@ class PipelineSpec extends SparkSpec {
   test("Tfidf.pageVectors launches no job at DAG-construction time") {
     val ex = Extract(pages)
     ex.count() // materialize inputs first — the probe targets pageVectors only
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val sc = spark.sparkContext
-    // job-group id is thread-local and stamped into each job's properties,
-    // so concurrent suites sharing the session don't pollute the count
-    val probeGroup = "tfidf-construct-probe"
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            probeGroup == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(probeGroup, "pageVectors construction probe")
-    try {
-      val df = Tfidf.pageVectors(ex) // an eager head()/count() here would fire a job
-      org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-      assert(jobs.get == 0, s"plan construction launched ${jobs.get} job(s)")
-      assert(df.columns.toSeq == Seq("url", "hs", "ws"))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
+    // an eager head()/count() inside pageVectors would fire a job
+    val (df, jobs) = countJobs(Tfidf.pageVectors(ex))
+    assert(jobs == 0, s"plan construction launched $jobs job(s)")
+    assert(df.columns.toSeq == Seq("url", "hs", "ws"))
   }
 
   test("block metrics report chained/purged tiers") {

@@ -72,4 +72,66 @@ class SnapshotSpec extends SparkSpec {
     assert(met.filter(col("name") === "n_clusters").count() == 1L)
     assert(met.filter(col("stage") === "pairs").count() >= 4L)
   }
+
+  test("a replay adds no metrics or lineage rows; n_clusters once per clusters snapshot") {
+    val root = tmpRoot()
+    val gen = CorpusGen.generate(spark, 300L, 60L).cache()
+    val pages = CorpusGen.pages(gen)
+    val store = new SnapshotStore(spark, root)
+    ResumablePipeline.run(spark, store, pages)
+    val nMetrics = store.metrics.get.count()
+    val nLineage = store.lineage.get.count()
+
+    ResumablePipeline.run(spark, store, pages)
+    assert(store.metrics.get.count() == nMetrics)
+    assert(store.lineage.get.count() == nLineage)
+
+    // a recomputed clusters stage records its own n_clusters row
+    import scala.reflect.io.Directory
+    new Directory(new java.io.File(s"$root/clusters")).deleteRecursively()
+    ResumablePipeline.run(spark, store, pages)
+    ResumablePipeline.run(spark, store, pages)
+    val perSnapshot = store.metrics.get.filter(col("name") === "n_clusters")
+      .groupBy("snapshot_id").count().as[(Long, Long)].collect().toMap
+    assert(perSnapshot == Map(1L -> 1L, 2L -> 1L))
+  }
+
+  test("a store rooted at a file: URI finds its log and replays") {
+    val root = "file:" + tmpRoot()
+    val gen = CorpusGen.generate(spark, 300L, 60L).cache()
+    val pages = CorpusGen.pages(gen)
+    val run1 = ResumablePipeline.run(spark, new SnapshotStore(spark, root), pages)
+      .as[(Long, Long)].collect().sorted.toSeq
+    val store = new SnapshotStore(spark, root)
+    val n = store.snapshots.get.count()
+    val run2 = ResumablePipeline.run(spark, store, pages)
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(run2 == run1)
+    assert(store.snapshots.get.count() == n)
+  }
+
+  test("a replay stays within its Spark job budget and writes no file") {
+    val root = tmpRoot()
+    val gen = CorpusGen.generate(spark, 300L, 60L).cache()
+    val pages = CorpusGen.pages(gen)
+    val store = new SnapshotStore(spark, root)
+    val committed = ResumablePipeline.run(spark, store, pages)
+    def files(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(java.nio.file.Paths.get(root))
+      try walk.iterator().asScala.map(_.toString).toSet finally walk.close()
+    }
+    val before = files()
+
+    val (replayed, jobs) = countJobs(ResumablePipeline.run(spark, store, pages))
+    assert(jobs <= 1, s"replay launched $jobs jobs")
+    assert(files() == before)
+    assert(replayed.schema == committed.schema)
+    // snapshots read with their footer schema see what inference sees
+    val ch = ResumablePipeline.confHash(ErConfig())
+    for (stage <- Seq("extract", "mentions", "pairs", "edges", "clusters")) {
+      val (id, df) = store.latest(stage, ch).get
+      assert(df.schema == spark.read.parquet(s"$root/$stage/snapshot=$id").schema, stage)
+    }
+  }
 }

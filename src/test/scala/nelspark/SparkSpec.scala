@@ -31,4 +31,28 @@ abstract class SparkSpec extends AnyFunSuite {
     val res = org.scalacheck.Test.check(params, p)
     assert(res.passed, s"property failed: ${res.status}")
   }
+
+  /** `f`'s result and the number of Spark jobs it launched. The job-group
+    * id is thread-local and stamped into each job's properties, so jobs
+    * of concurrent suites sharing the session are not counted. */
+  def countJobs[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"job-count-probe-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && group == j.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "job-count probe")
+    try {
+      val out = f
+      org.apache.spark.sql.NelShim.waitForListenerBus(spark)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+  }
 }
