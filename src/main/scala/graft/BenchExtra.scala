@@ -13,7 +13,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *   time [repeats] [q1,q2,...]   — per-query noop-sink wall times
  *                                  (guide §1.4: compute every column, no
  *                                  count() pruning, no sink cost)
- *   pipeline [nPages nEntities]  — phase-decomposed flagship timing
+ *   count [repeats] [q1,q2,...]  — the driver's count() timing, per-query
+ *                                  min over in-JVM repeats
+ *   jobs [query] [reps]          — per-job wall and per-stage task time
+ *                                  of one query's last rep
  *
  * Env contract matches Bench: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
  */
@@ -42,66 +45,6 @@ object BenchExtra {
         val repeats = rest.headOption.map(_.toInt).getOrElse(3)
         val only = rest.drop(1).headOption.map(_.split(",").toSet)
         countMin(spark, sfDir, repeats, only)
-      case "pipeline" :: rest =>
-        val nPages = rest.headOption.map(_.toLong).getOrElse(2000L)
-        val nEnt = if (rest.length > 1) rest(1).toLong else nPages / 5
-        pipelinePhases(spark, nPages, nEnt)
-      case "cachedbg" :: _ =>
-        val gen = nelspark.gen.CorpusGen.generate(spark, 2000, 400).cache()
-        val cfg = nelspark.pipeline.ErConfig()
-        val pages = nelspark.gen.CorpusGen.pages(gen)
-        val gold = nelspark.gen.CorpusGen.gold(gen)
-        val res = nelspark.pipeline.Pipeline.run(spark, pages, gold, cfg)
-        def stat(n: String, df: org.apache.spark.sql.DataFrame): Unit = {
-          val p = df.queryExecution.executedPlan.toString
-          println(s"[cachedbg] $n: imts=${"InMemoryTableScan".r.findAllIn(p).size} " +
-            s"genscan=${"SerializeFromObject".r.findAllIn(p).size} " +
-            s"mentionscan=${"extract_mentions".r.findAllIn(p).size}")
-        }
-        stat("f1", res.f1)
-        stat("assignments", res.assignments)
-        val tns = new java.util.concurrent.atomic.AtomicLong
-        spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (te.taskMetrics != null)
-              tns.addAndGet(te.taskMetrics.executorRunTime * 1000000L): Unit
-        })
-        def probe(n: String)(f: => Unit): Unit = {
-          org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-          tns.set(0)
-          val t0 = System.nanoTime()
-          f
-          org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-          println(f"[cachedbg] $n wall=${(System.nanoTime()-t0)/1e9}%.2f " +
-            f"task-s=${tns.get/1e9}%.2f")
-        }
-        probe("gold.count")(gold.count(): Unit)
-        probe("pages.count")(pages.count(): Unit)
-        probe("mentions.count")(res.mentions.count(): Unit)
-        probe("labeled.count")(
-          nelspark.pipeline.Evaluate.labeledMentions(res.mentions, gold).count(): Unit)
-        locally {
-          import org.apache.spark.sql.functions._
-          val extracted = nelspark.pipeline.Extract(pages)
-          val terms = extracted
-            .select(col("url"), explode(split(lower(col("text")), "\\s+")).as("term"))
-            .filter(length(col("term")) > 0)
-            .groupBy("url", "term").agg(count(lit(1)).cast("double").as("tf"))
-          probe("tf.count")(terms.count(): Unit)
-          val withDf = terms.withColumn("df", count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("term")))
-          probe("withDf.count")(withDf.count(): Unit)
-          val topped = withDf
-            .withColumn("rk", row_number().over(org.apache.spark.sql.expressions
-              .Window.partitionBy("url").orderBy(desc("df"), asc("term"))))
-            .filter(col("rk") <= cfg.ctxTopK)
-          probe("topped.count")(topped.count(): Unit)
-        }
-        probe("vecs.count")(
-          nelspark.pipeline.Tfidf.pageVectors(
-            nelspark.pipeline.Extract(pages), cfg.ctxTopK).count(): Unit)
-        probe("f1.collect")(res.f1.collect(): Unit)
-        probe("f1.collect2")(res.f1.collect(): Unit)
       case "jobs" :: rest =>
         // run one query (default q_pipeline_f1) N times; after warmup,
         // print every Spark job's wall time + stage task totals — the
@@ -180,98 +123,24 @@ object BenchExtra {
 
   private def jobBreakdown(spark: SparkSession, sfDir: String,
       qname: String, reps: Int): Unit = {
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
-    val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Double, String, Int)]()
-    val taskNs = new java.util.concurrent.atomic.AtomicLong
-    val stage2job = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val jobTaskNs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-    val stageName = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.put(js.jobId, (System.nanoTime(),
-          Option(js.properties.getProperty("spark.job.description")).getOrElse(""),
-          js.stageInfos.map(_.numTasks).sum))
-        js.stageInfos.foreach { si =>
-          stage2job.put(si.stageId, js.jobId)
-          stageName.put(si.stageId,
-            si.rddInfos.map(_.name).mkString(">").take(200))
-        }
-      }
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val st = jobs.remove(je.jobId)
-        if (st != null)
-          done.add((je.jobId, (System.nanoTime() - st._1) / 1e9, st._2, st._3))
-      }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          val ns = te.taskMetrics.executorRunTime * 1000000L
-          taskNs.addAndGet(ns)
-          jobTaskNs.computeIfAbsent(te.stageId,
-            _ => new java.util.concurrent.atomic.AtomicLong).addAndGet(ns): Unit
-        }
-    })
+    import org.apache.spark.sql.NelShim.waitForListenerBus
+    val tasks = new nelspark.util.TaskMetricsListener
+    spark.sparkContext.addSparkListener(tasks)
     val fn = SparkEntry.queries(qname)
     (1 until reps).foreach { _ => fn(spark, sfDir).count() } // warmup reps
-    org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-    done.clear(); taskNs.set(0L); jobTaskNs.clear()
+    waitForListenerBus(spark)
+    tasks.reset()
     val t0 = System.nanoTime()
     fn(spark, sfDir).count()
     val wall = (System.nanoTime() - t0) / 1e9
-    org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-    val rows = done.toArray(Array.empty[(Int, Double, String, Int)]).sortBy(_._1)
-    rows.foreach { case (id, w, desc, nt) =>
-      println(f"[job] #$id%-4d ${w}%6.3f s  tasks=$nt%-4d")
-    }
+    waitForListenerBus(spark)
+    val jobs = tasks.jobs
+    jobs.foreach(j => println(f"[job] #${j.id}%-4d ${j.wallS}%6.3f s  ${j.description}"))
     // per-STAGE task time (stages run once; job attribution lies under AQE)
-    jobTaskNs.entrySet().toArray(
-      Array.empty[java.util.Map.Entry[Int, java.util.concurrent.atomic.AtomicLong]])
-      .sortBy(-_.getValue.get).take(25).foreach { e =>
-        println(f"[stage] #${e.getKey}%-5d task-s=${e.getValue.get / 1e9}%7.2f  " +
-          Option(stageName.get(e.getKey)).getOrElse(""))
-      }
-    println(f"[job] measured-rep wall=${wall}%.2f s, jobs=${rows.length}, " +
-      f"sum-job-wall=${rows.map(_._2).sum}%.2f s, task-time=${taskNs.get / 1e9}%.2f s")
-  }
-
-  /** Flagship decomposition: time each pipeline phase with its own
-    * action so the 18s q_pipeline_f1 wall is attributable. */
-  private def pipelinePhases(spark: SparkSession, nPages: Long,
-      nEntities: Long): Unit = {
-    import nelspark.gen.CorpusGen
-    import nelspark.pipeline._
-    import org.apache.spark.sql.functions.col
-    val cfg = ErConfig()
-    def ph[T](name: String)(f: => T): T = {
-      spark.sparkContext.setJobDescription(s"phase:$name")
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[phase] $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      spark.sparkContext.setJobDescription(null)
-      r
+    tasks.stages.sortBy(-_._2.taskMs).take(25).foreach { case (id, t) =>
+      println(f"[stage] #$id%-5d task-s=${t.taskMs / 1e3}%7.2f  tasks=${t.tasks}")
     }
-    val total0 = System.nanoTime()
-    val gen = CorpusGen.generate(spark, nPages, nEntities).cache()
-    ph("generate+cache")(gen.count())
-    val pages = CorpusGen.pages(gen)
-    val gold = CorpusGen.gold(gen)
-    val extracted = Extract(pages)
-    val mentions = Mentions(extracted, cfg).cache()
-    ph("mentions(cache)")(mentions.count())
-    val keys = Block.keys(mentions, cfg)
-    val (pairs, _) = Block.pairs(keys, mentions, cfg)
-    val vecs = Tfidf.pageVectors(extracted, cfg.ctxTopK)
-    ph("pairs(noop)")(noop(pairs))
-    ph("vecs(noop)")(noop(vecs))
-    val scored = Score(pairs, mentions, vecs, cfg)
-    val edges = Score.edges(scored, cfg)
-    ph("edges(noop)")(noop(edges))
-    val assign = ph("cc")(Cluster.connectedComponents(
-      edges, mentions.select("mention_id"), cfg).cache())
-    ph("cc action")(assign.count())
-    val labeled = Evaluate.labeledMentions(mentions, gold)
-    val f1 = Evaluate.pairwiseF1(Evaluate.labeledPairs(labeled), assign)
-    ph("f1 collect")(f1.collect())
-    println(f"[phase] TOTAL                  ${(System.nanoTime() - total0) / 1e9}%6.2f s")
-    gen.unpersist(); mentions.unpersist(); assign.unpersist()
+    println(f"[job] measured-rep wall=${wall}%.2f s, jobs=${jobs.length}, " +
+      f"sum-job-wall=${jobs.map(_.wallS).sum}%.2f s, task-time=${tasks.total.taskMs / 1e3}%.2f s")
   }
 }

@@ -27,22 +27,25 @@ object SparkEntry {
   /** Scale-adaptive scan fan-out (optimization guide §2.5 "input skew"):
     * the sf test tables are single-row-group parquet files, so their
     * scans are one unsplittable task and every pre-shuffle per-row
-    * kernel (cosine, explode, regex) runs on ONE core. When the scan
-    * has fewer partitions than the session's parallelism, repartition
-    * right after the read — the cheap narrow-row exchange buys a
-    * cores-wide stage for the heavy work. At production scale inputs
-    * are many files, the scan already fans out, and this is a no-op
-    * (the condition keys off the real partition count, not a constant
-    * tuned to local[32]). Apply only where per-row/pair compute
+    * kernel (cosine, explode, regex) runs on ONE core. When the input
+    * bytes (sized through each file's Hadoop file system, so `hdfs:` and
+    * `s3a:` inputs too) split into fewer `maxPartitionBytes` chunks than
+    * the session's parallelism, repartition right after the read — the
+    * cheap narrow-row exchange buys a cores-wide stage for the heavy
+    * work. At production scale the inputs span far more chunks than
+    * cores and this is a no-op. Apply only where per-row/pair compute
     * dominates AND the result is partition-order-independent (exact
     * aggregates, or per-row values rounded before compare). */
-  private def fanOut(df: DataFrame, key: Column): DataFrame = {
+  private[graft] def fanOut(df: DataFrame, key: Column): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
     // file-size arithmetic, not df.rdd.getNumPartitions: the latter
     // forces an extra physical planning pass per query construction
     val maxPB = org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
-    val bytes = df.inputFiles.map(f =>
-      new java.io.File(new java.net.URI(f)).length()).sum
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val bytes = df.inputFiles.map { f =>
+      val path = new org.apache.hadoop.fs.Path(new java.net.URI(f))
+      path.getFileSystem(conf).getFileStatus(path).getLen
+    }.sum
     val scanParts = ((bytes + maxPB - 1) / maxPB).toInt
     // HASH repartition on a unique key: a keyless repartition(n) pays a
     // local sort of its input first (sortBeforeRepartition, guide §2.5)

@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * spark-submit / sbt-run entry point. Modes:
- *   exprdemo <outDir>  — exercise the custom expression surface end-to-end
- *                        and write a parquet sample for oracle cross-checks.
- *   pipeline <workDir> — run the full ER pipeline on a generated corpus
- *                        (added in the pipeline milestone).
+ *   exprdemo <outDir>                — exercise the custom expression
+ *                                      surface; write parquet samples.
+ *   pipeline [nPages nEntities]      — the full ER pipeline and its F1.
+ *   bench <nPages> <cores> <outJson> — one scaling-bench level.
+ *   explain <outFile>                — plans of the stages and key queries.
  */
 object Main {
   /**
@@ -57,12 +58,9 @@ object Main {
       // 4x cores: heavy mega-block groups (hot entities) must spread
       // across many more partitions than cores or one straggler task
       // caps the whole stage; AQE parallelism-first keeps them >= cores
-      .config("spark.sql.shuffle.partitions",
-        (math.max(cores.toInt, 1) *
-          sys.env.getOrElse("NELSPARK_SHUFFLE_MULT", "4").toInt).toString)
+      .config("spark.sql.shuffle.partitions", (math.max(cores.toInt, 1) * 4).toString)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("NELSPARK_AQE_COALESCE", "true"))
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // keep post-shuffle parallelism ≥ cores: without this, AQE coalesces
       // shuffles to 64MB chunks and a local[32] run executes ~5-wide
       // (measured: 4-5 busy threads of 32)
@@ -77,17 +75,14 @@ object Main {
       // Empty arrays are rare in this workload, so the skip it buys is
       // worthless.
       .config("spark.sql.optimizer.excludedRules",
-        sys.env.getOrElse("NELSPARK_EXCLUDED_RULES",
-          "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"))
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       // allow shuffled-hash joins where a side's per-partition build fits
       // (guide §3.1/§9): SMJ pays two full sorts that SHJ skips; AQE can
       // additionally rewrite SMJ→SHJ at runtime under the local-map
-      // threshold. Parameterised; sort-merge remains the spill-safe
-      // fallback above the threshold at any scale.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("NELSPARK_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("NELSPARK_SHJ_LOCALMAP", "64m"))
+      // threshold. Sort-merge remains the spill-safe fallback above the
+      // threshold at any scale.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       // input splits: small dense parquet (≈30MB for 500k mentions) must
       // still fan out across cores
       .config("spark.sql.files.maxPartitionBytes", "16m")
@@ -112,7 +107,7 @@ object Main {
     case "bench" :: nPagesS :: coresS :: outPath :: Nil =>
       scalingBench(nPagesS.toLong, coresS, outPath)
     case "explain" :: outPath :: Nil => explainPlans(session("4"), outPath)
-    case other => sys.error(s"unknown mode: $other (expected: exprdemo <outDir> | pipeline [nPages nEntities] | bench <nPages> <cores> <outJson>)")
+    case other => sys.error(s"unknown mode: $other (expected: exprdemo <outDir> | pipeline [nPages nEntities] | bench <nPages> <cores> <outJson> | explain <outFile>)")
   }
 
   /**
@@ -125,99 +120,64 @@ object Main {
   private def scalingBench(nPages: Long, cores: String, outPath: String): Unit = {
     import nelspark.gen.CorpusGen
     import nelspark.pipeline._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.NelShim.waitForListenerBus
     val spark = session(cores)
     val cfg = ErConfig()
-    val fixDir = s"target/fixtures/bench_$nPages"
-    CorpusGen.ensureFixture(spark, fixDir, nPages, nPages / 5)
-    val pages = spark.read.parquet(s"$fixDir/pages.parquet")
 
-    // pre-stage (excluded from timing, shared by both levels)
-    val preDir = s"$fixDir/pre"
-    if (!new java.io.File(s"$preDir/_DONE").exists()) {
-      val extracted = Extract(pages)
-      Mentions(extracted, cfg).write.mode("overwrite").parquet(s"$preDir/mentions.parquet")
-      Tfidf.pageVectors(extracted, cfg.ctxTopK).write.mode("overwrite").parquet(s"$preDir/vecs.parquet")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$preDir/_DONE"), "ok")
+    // pre-stage (excluded from timing, shared by both levels): the
+    // fixture's mentions and page vectors, written once per fixture
+    def preStage(n: Long): (DataFrame, DataFrame) = {
+      val fixDir = s"target/fixtures/bench_$n"
+      CorpusGen.ensureFixture(spark, fixDir, n, n / 5)
+      val pre = s"$fixDir/pre"
+      if (!new java.io.File(s"$pre/_DONE").exists()) {
+        val prefix = new Linkage.Prefix(spark.read.parquet(s"$fixDir/pages.parquet"), cfg, _.frame)
+        prefix.mentions.write.mode("overwrite").parquet(s"$pre/mentions.parquet")
+        prefix.vectors.write.mode("overwrite").parquet(s"$pre/vecs.parquet")
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$pre/_DONE"), "ok")
+      }
+      (spark.read.parquet(s"$pre/mentions.parquet"), spark.read.parquet(s"$pre/vecs.parquet"))
     }
-    val mentions = spark.read.parquet(s"$preDir/mentions.parquet")
-    val vecs = spark.read.parquet(s"$preDir/vecs.parquet")
+    // FUSED blocking → scoring → clustering as one linear DAG with no
+    // mid-pipeline cache/count barriers (each barrier both serializes the
+    // run and double-buffers 16M-row intermediates). This is the plan
+    // shape a production run uses.
+    def clusterCount(mentions: DataFrame, vecs: DataFrame): Long =
+      new Linkage.Suffix(mentions, vecs, cfg, _.frame).clusters
+        .select("cluster_id").distinct().count()
 
+    val (mentions, vecs) = preStage(nPages)
     // Untimed warmup: the identical DAG at 1/10 scale. Whole-stage-codegen
     // compilation + C2 JIT of the kernels is a CONSTANT ~3-5s that would
     // otherwise be billed to the timed run — a 4-6% phantom penalty on the
     // fast (4N) level vs ~1.5% on the slow one, skewing the efficiency
     // ratio. Same hygiene as graft.Bench's untimed warmup.
-    {
-      val wDir = s"target/fixtures/bench_${nPages / 10}"
-      CorpusGen.ensureFixture(spark, wDir, nPages / 10, nPages / 50)
-      val wPages = spark.read.parquet(s"$wDir/pages.parquet")
-      val wPre = s"$wDir/pre"
-      if (!new java.io.File(s"$wPre/_DONE").exists()) {
-        val ex = Extract(wPages)
-        Mentions(ex, cfg).write.mode("overwrite").parquet(s"$wPre/mentions.parquet")
-        Tfidf.pageVectors(ex, cfg.ctxTopK).write.mode("overwrite").parquet(s"$wPre/vecs.parquet")
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$wPre/_DONE"), "ok")
-      }
-      val wM = spark.read.parquet(s"$wPre/mentions.parquet")
-      val wV = spark.read.parquet(s"$wPre/vecs.parquet")
-      val wKeys = Block.keys(wM, cfg)
-      val (wPairs, _) = Block.pairs(wKeys, wM, cfg)
-      val wEdges = Score.edges(Score(wPairs, wM, wV, cfg), cfg)
-      Cluster.connectedComponents(wEdges, wM.select("mention_id"), cfg)
-        .select("cluster_id").distinct().count(): Unit
-    }
+    val (warmMentions, warmVecs) = preStage(nPages / 10)
+    clusterCount(warmMentions, warmVecs): Unit
 
-    // Task/shuffle decomposition listener: executor task-time vs wall
-    // separates plan-attributable loss from single-box memory contention,
-    // and the shuffle volume + fetch-wait share is the EXECUTOR-TRANSFER
+    // Task/shuffle decomposition: executor task-time vs wall separates
+    // plan-attributable loss from single-box memory contention, and the
+    // shuffle volume + fetch-wait share is the EXECUTOR-TRANSFER
     // evidence — on a real N→4N scale-out the local memory-contention
     // term vanishes and cross-executor shuffle transfer is the term that
-    // replaces it, so its measured size bounds that cost.
-    val taskNanos = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val shWriteB = new java.util.concurrent.atomic.AtomicLong
-    val shReadB = new java.util.concurrent.atomic.AtomicLong
-    val fetchWaitMs = new java.util.concurrent.atomic.AtomicLong
-    // drain the async listener bus BEFORE registering: warmup-tail
-    // SparkListenerTaskEnd events still queued would otherwise be delivered
-    // to the new listener and billed to the timed section (mirrors the
-    // drain already done before reading the totals)
-    org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          taskNanos.addAndGet(m.executorRunTime * 1000000L)
-          gcMs.addAndGet(m.jvmGCTime)
-          shWriteB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shReadB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          fetchWaitMs.addAndGet(m.shuffleReadMetrics.fetchWaitTime)
-        }
-      }
-    })
-
-    // FUSED timed section: blocking → scoring → clustering as one linear
-    // DAG with no mid-pipeline cache/count barriers (each barrier both
-    // serializes the run and double-buffers 16M-row intermediates).
-    // This is the plan shape a production run uses.
+    // replaces it, so its measured size bounds that cost. The bus is
+    // drained before registering, so no warmup task is counted.
+    waitForListenerBus(spark)
+    val tasks = new nelspark.util.TaskMetricsListener
+    spark.sparkContext.addSparkListener(tasks)
     val t0 = System.nanoTime()
-    val keys = Block.keys(mentions, cfg)
-    val (pairs, _) = Block.pairs(keys, mentions, cfg)
-    val edges = Score.edges(Score(pairs, mentions, vecs, cfg), cfg)
-    val assign = Cluster.connectedComponents(edges, mentions.select("mention_id"), cfg)
-    val nClusters = assign.select("cluster_id").distinct().count()
+    val nClusters = clusterCount(mentions, vecs)
     val wall = (System.nanoTime() - t0) / 1e9
-    // listener events arrive on an async bus — drain it before reading
-    // the totals or the tail task wave is silently missing from task_s
-    org.apache.spark.sql.NelShim.waitForListenerBus(spark)
+    waitForListenerBus(spark)
+    val t = tasks.total
     val json = f"""{"bench":"er_scaling","cores":$cores,"pages":$nPages,""" +
       f""""clusters":$nClusters,""" +
       f""""wall_s":$wall%.2f,"docs_per_sec":${nPages / wall}%.1f,""" +
-      f""""task_s":${taskNanos.get / 1e9}%.1f,"gc_s":${gcMs.get / 1e3}%.1f,""" +
-      f""""shuffle_write_mb":${shWriteB.get / 1048576.0}%.1f,""" +
-      f""""shuffle_read_mb":${shReadB.get / 1048576.0}%.1f,""" +
-      f""""fetch_wait_s":${fetchWaitMs.get / 1e3}%.1f}"""
+      f""""task_s":${t.taskMs / 1e3}%.1f,"gc_s":${t.gcMs / 1e3}%.1f,""" +
+      f""""shuffle_write_mb":${t.shuffleWriteBytes / 1048576.0}%.1f,""" +
+      f""""shuffle_read_mb":${t.shuffleReadBytes / 1048576.0}%.1f,""" +
+      f""""fetch_wait_s":${t.fetchWaitMs / 1e3}%.1f}"""
     println(json)
     val p = java.nio.file.Paths.get(outPath)
     if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
@@ -228,35 +188,27 @@ object Main {
 
   /** Dump `explain("formatted")` for the load-bearing plans — the
     * physical-plan review artifact (PushedFilters, join strategies,
-    * WholeStageCodegen spans, exchange placement). */
+    * WholeStageCodegen spans, exchange placement): every pipeline stage,
+    * the scored pairs, and key driver queries. Building the `clusters`
+    * stage runs connected components, so the pipeline executes once. */
   private def explainPlans(spark: SparkSession, outPath: String): Unit = {
     import nelspark.gen.CorpusGen
     import nelspark.pipeline._
-    import org.apache.spark.sql.functions.col
     val cfg = ErConfig()
     val gen = CorpusGen.generate(spark, 2000L, 400L).cache()
     val dir = "target/fixtures/explain"
     CorpusGen.pages(gen).write.mode("overwrite").parquet(s"$dir/pages.parquet")
     val pages = spark.read.parquet(s"$dir/pages.parquet")
-    val extracted = Extract(pages)
-    val mentions = Mentions(extracted, cfg)
-    val keys = Block.keys(mentions, cfg)
-    val (pairs, _) = Block.pairs(keys, mentions, cfg)
-    val vecs = Tfidf.pageVectors(extracted, cfg.ctxTopK)
-    val scored = Score(pairs, mentions, vecs, cfg)
     val sb = new StringBuilder
     def put(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n==================== $name ====================\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     }
-    // predicate pushdown + column pruning evidence: lang filter on scan
-    put("mentions (lang filter pushed to parquet scan + mention explode)",
-      mentions)
+    val dag = Linkage(pages, cfg) { stage => put(stage.name, stage.frame); stage.frame }
+    put("scored (cascade + packed-vector sparse-dot joins)", dag.scored)
     put("q_join_dim (broadcast dim join)", graft.SparkEntry
       .queries("q_join_dim")(spark, "/root/testdata/sf0.001"))
-    put("pairs (3-tier blocking: clique join + chain window)", pairs)
-    put("scored (cascade + packed-vector sparse-dot joins)", scored)
     put("q_skew_salted_join (salted equi-join: dim exploded x8, no straggler key)",
       graft.SparkEntry.queries("q_skew_salted_join")(spark, "/root/testdata/sf0.001"))
     put("q_dedup_ngram_jaccard (prefix-blocked n-gram jaccard self-join)",

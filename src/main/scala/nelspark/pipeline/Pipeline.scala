@@ -262,10 +262,15 @@ object Tfidf {
 /** F3/F4/F12: batched pairwise scoring. */
 object Score {
   /**
-   * (a_id, b_id, jw, lev_ratio, ctx_cos, score). Name features come from
-   * an equi-join of pairs to the mention table (twice); context cosine is
-   * a sparse dot product computed once per distinct URL pair (join+agg
-   * form, J3) and reused by every mention pair on those pages.
+   * (a_id, b_id, jw, lev_ratio, ctx_cos, score). Name features are
+   * computed on the normalized names each pair row carries from
+   * [[Block.pairs]]; a pair whose score cannot reach τ even at
+   * ctx_cos = 1 is dropped before the context joins. The context cosine
+   * is a sparse dot product of the two pages' packed vectors, joined to
+   * every surviving pair by a_url and then by b_url.
+   *
+   * @param mentions unused: the pairs carry every mention attribute the
+   *                 score needs. Kept for source compatibility.
    */
   def apply(pairs: DataFrame, mentions: DataFrame, pageVecs: DataFrame,
       cfg: ErConfig): DataFrame = {
@@ -357,11 +362,6 @@ object Cluster {
         .isEmpty
   }
 
-  /**
-   * @param edges    (a_id, b_id) undirected match edges
-   * @param allIds   one-column DF of every node id (singletons included)
-   * @return         (mention_id, cluster_id) with cluster_id = min member id
-   */
   /** Driver-local union-find over a collected edge array; cluster id =
     * min member id (same contract as the distributed path — CC tests
     * assert both paths agree on the same graphs). */
@@ -390,6 +390,11 @@ object Cluster {
     out.toSeq
   }
 
+  /**
+   * @param edges    (a_id, b_id) undirected match edges
+   * @param allIds   one-column DF of every node id (singletons included)
+   * @return         (mention_id, cluster_id) with cluster_id = min member id
+   */
   def connectedComponents(edges: DataFrame, allIds: DataFrame,
       cfg: ErConfig): DataFrame = {
     var e = edges.select("a_id", "b_id").localCheckpoint(true)
@@ -488,33 +493,81 @@ object Evaluate {
   }
 }
 
-/** Orchestration: the full DAG in one call (checkpoint-aware variant in
-  * [[nelspark.store.SnapshotStore]] milestone). */
+
+/**
+ * The linkage DAG, wired once: extract → mentions → pairs → edges →
+ * clusters. Side outputs: the page vectors, built from the extracted text
+ * and read by `edges`, and the block metrics of `pairs`. A runner
+ * supplies only its behaviour at each stage boundary. [[Linkage.Prefix]]
+ * (pages → mentions + vectors) and [[Linkage.Suffix]] (mentions + vectors
+ * → clusters) also run alone.
+ */
+object Linkage {
+  /** A stage handed to the runner at its boundary. `frame` is built on
+    * first use, so a runner that replays the stage never builds it;
+    * `metrics` is the stage's one-row frame of counts, if it has one. */
+  final class Stage(val name: String, build: => DataFrame,
+      metricsOf: => Option[DataFrame] = None) {
+    lazy val frame: DataFrame = build
+    def metrics: Option[DataFrame] = metricsOf
+  }
+
+  /** A runner's behaviour at a stage boundary: returns the frame that the
+    * later stages read. */
+  type Boundary = Stage => DataFrame
+
+  final class Prefix(pages: DataFrame, cfg: ErConfig, at: Boundary) {
+    val extracted: DataFrame = at(new Stage("extract", Extract(pages)))
+    val mentions: DataFrame = at(new Stage("mentions", Mentions(extracted, cfg)))
+    lazy val vectors: DataFrame = Tfidf.pageVectors(extracted, cfg.ctxTopK)
+  }
+
+  /** `vectors` is evaluated only if `edges` is built. */
+  final class Suffix(val mentions: DataFrame, vectors: => DataFrame, cfg: ErConfig,
+      at: Boundary) {
+    private lazy val blocked = Block.pairs(Block.keys(mentions, cfg), mentions, cfg)
+    val pairs: DataFrame = at(new Stage("pairs", blocked._1, Some(blocked._2)))
+    def blockMetrics: DataFrame = blocked._2
+    lazy val scored: DataFrame = Score(pairs, mentions, vectors, cfg)
+    val edges: DataFrame = at(new Stage("edges", Score.edges(scored, cfg)))
+    val clusters: DataFrame = at(new Stage("clusters",
+      Cluster.connectedComponents(edges, mentions.select("mention_id"), cfg)))
+  }
+
+  def apply(pages: DataFrame, cfg: ErConfig)(at: Boundary): Suffix = {
+    val prefix = new Prefix(pages, cfg, at)
+    new Suffix(prefix.mentions, prefix.vectors, cfg, at)
+  }
+}
+
+/** The in-memory runner of [[Linkage]], with pairwise F1 against gold
+  * labels. The snapshot-store runner is [[nelspark.store.ResumablePipeline]]. */
 object Pipeline {
   case class Result(mentions: DataFrame, assignments: DataFrame,
       metrics: DataFrame, f1: DataFrame)
 
   def run(spark: SparkSession, pages: DataFrame, gold: DataFrame,
       cfg: ErConfig = ErConfig()): Result = {
-    val extracted = Extract(pages)
-    val mentions = Mentions(extracted, cfg).cache()
-    // Eager cache fill, ONE job, before the fan-out: downstream the DAG
-    // has ~8 independent AQE leaf stages (clique sides, mega tier, tfidf,
-    // eval join) that are submitted concurrently — against a COLD cache
-    // every one of them recomputes generation+extraction end to end
-    // (measured: 8 × ~15 task-s of duplicated work at 2k pages, >75% of
-    // the flagship's total CPU). One count() materializes mentions (and,
-    // transitively, any cached upstream corpus) exactly once.
-    mentions.count(): Unit
-    val keys = Block.keys(mentions, cfg)
-    val (pairs, blockMetrics) = Block.pairs(keys, mentions, cfg)
-    val vecs = Tfidf.pageVectors(extracted, cfg.ctxTopK)
-    val scored = Score(pairs, mentions, vecs, cfg)
-    val edges = Score.edges(scored, cfg)
-    val assign = Cluster.connectedComponents(
-      edges, mentions.select("mention_id"), cfg).cache()
-    val labeled = Evaluate.labeledMentions(mentions, gold)
-    val f1 = Evaluate.pairwiseF1(Evaluate.labeledPairs(labeled), assign)
-    Result(mentions, assign, blockMetrics, f1)
+    val dag = Linkage(pages, cfg) { stage =>
+      stage.name match {
+        case "mentions" =>
+          // Eager cache fill, ONE job, before the fan-out: downstream the
+          // DAG has ~8 independent AQE leaf stages (clique sides, mega
+          // tier, tfidf, eval join) that are submitted concurrently —
+          // against a COLD cache every one of them recomputes
+          // generation+extraction end to end (measured: 8 × ~15 task-s of
+          // duplicated work at 2k pages, >75% of the flagship's total
+          // CPU). One count() materializes mentions (and, transitively,
+          // any cached upstream corpus) exactly once.
+          val mentions = stage.frame.cache()
+          mentions.count(): Unit
+          mentions
+        case "clusters" => stage.frame.cache()
+        case _ => stage.frame
+      }
+    }
+    val labeled = Evaluate.labeledMentions(dag.mentions, gold)
+    val f1 = Evaluate.pairwiseF1(Evaluate.labeledPairs(labeled), dag.clusters)
+    Result(dag.mentions, dag.clusters, dag.blockMetrics, f1)
   }
 }

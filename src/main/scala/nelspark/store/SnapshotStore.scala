@@ -185,7 +185,7 @@ object SnapshotStore {
     .add("value", DoubleType, nullable = false)
 }
 
-/** Checkpointed, resumable variant of the full pipeline DAG. */
+/** The snapshot-store runner of [[nelspark.pipeline.Linkage]]. */
 object ResumablePipeline {
   import nelspark.pipeline._
 
@@ -195,35 +195,30 @@ object ResumablePipeline {
 
   /**
    * Runs extract → mentions → pairs → edges → clusters with each stage
-   * committed as a snapshot. A rerun over the same store replays every
-   * committed stage (byte-identical outputs) and recomputes only missing
-   * or config-invalidated ones.
+   * committed as a snapshot whose input is the previous stage's snapshot.
+   * A rerun over the same store replays every committed stage
+   * (byte-identical outputs) and recomputes only missing or
+   * config-invalidated ones. A committed stage records its metrics under
+   * its own snapshot id; `clusters` also records `n_clusters`.
    */
   def run(spark: SparkSession, store: SnapshotStore, pages: DataFrame,
       cfg: ErConfig = ErConfig()): DataFrame = {
     val ch = confHash(cfg)
     store.refresh()
-    val (exId, extracted) = store.runStage("extract", ch) { Extract(pages) }
-    val (meId, mentions) = store.runStage("mentions", ch, exId) {
-      Mentions(extracted, cfg)
-    }
-    val (prId, pairs) = store.runStage("pairs", ch, meId) {
-      val keys = Block.keys(mentions, cfg)
-      val (p, metricsDf) = Block.pairs(keys, mentions, cfg)
-      val m = metricsDf.head()
-      store.addMetrics("pairs", meId, Seq("n_blocks", "n_chained", "n_purged", "max_block")
-        .map(k => k -> m.getAs[Long](k).toDouble): _*)
-      p
-    }
-    val (edId, edges) = store.runStage("edges", ch, prId) {
-      val vecs = Tfidf.pageVectors(extracted, cfg.ctxTopK)
-      Score.edges(Score(pairs, mentions, vecs, cfg), cfg)
-    }
-    val (_, clusters) = store.runStage("clusters", ch, edId,
-        onCommit = (id, df) => store.addMetrics("clusters", id,
-          "n_clusters" -> df.select("cluster_id").distinct().count().toDouble)) {
-      Cluster.connectedComponents(edges, mentions.select("mention_id"), cfg)
-    }
-    clusters
+    var input = -1L
+    Linkage(pages, cfg) { stage =>
+      val (id, df) = store.runStage(stage.name, ch, input, onCommit = (committedId, committed) => {
+        stage.metrics.foreach { m =>
+          val row = m.head()
+          store.addMetrics(stage.name, committedId,
+            m.columns.map(k => k -> row.getAs[Long](k).toDouble): _*)
+        }
+        if (stage.name == "clusters")
+          store.addMetrics("clusters", committedId,
+            "n_clusters" -> committed.select("cluster_id").distinct().count().toDouble)
+      })(stage.frame)
+      input = id
+      df
+    }.clusters
   }
 }

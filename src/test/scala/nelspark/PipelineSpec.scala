@@ -2,6 +2,7 @@ package nelspark
 
 import nelspark.gen.CorpusGen
 import nelspark.pipeline._
+import nelspark.store.{ResumablePipeline, SnapshotStore}
 import org.apache.spark.sql.functions._
 
 /** End-to-end gate tests (SURVEY.md §5.4–5.5; BASELINE.json binding
@@ -46,13 +47,16 @@ class PipelineSpec extends SparkSpec {
 
   test("clustering is deterministic across parallelism (local repartition probe)") {
     val cfg = ErConfig()
-    val mentions = Mentions(Extract(pages), cfg).cache()
-    val keys = Block.keys(mentions, cfg)
-    val (pairs, _) = Block.pairs(keys, mentions, cfg)
-    val vecs = Tfidf.pageVectors(Extract(pages))
-    val edges = Score.edges(Score(pairs, mentions, vecs, cfg), cfg).cache()
-    val a1 = Cluster.connectedComponents(edges.repartition(2), mentions.select("mention_id"), cfg)
-    val a2 = Cluster.connectedComponents(edges.repartition(13), mentions.select("mention_id"), cfg)
+    // cached stages are shared by plan, so both runs cluster the same edges
+    def assignments(edgeParts: Int) = Linkage(pages, cfg) { stage =>
+      stage.name match {
+        case "mentions" => stage.frame.cache()
+        case "edges" => stage.frame.cache().repartition(edgeParts)
+        case _ => stage.frame
+      }
+    }.clusters
+    val a1 = assignments(2)
+    val a2 = assignments(13)
     val d1 = a1.as[(Long, Long)].collect().sorted.toSeq
     val d2 = a2.as[(Long, Long)].collect().sorted.toSeq
     assert(d1 == d2)
@@ -100,17 +104,45 @@ class PipelineSpec extends SparkSpec {
   test("chained mega-blocks still cluster hot entities (scale path)") {
     // force every block through the chain tier
     val cfg = ErConfig(cliqueMax = 2, chainWindow = 3)
-    val mentions = Mentions(Extract(pages), cfg).cache()
-    val keys = Block.keys(mentions, cfg)
-    val (pairs, metrics) = Block.pairs(keys, mentions, cfg)
-    val vecs = Tfidf.pageVectors(Extract(pages))
-    val edges = Score.edges(Score(pairs, mentions, vecs, cfg), cfg)
-    val assign = Cluster.connectedComponents(edges, mentions.select("mention_id"), cfg)
-    val labeled = Evaluate.labeledMentions(mentions, gold)
-    val f1 = Evaluate.pairwiseF1(Evaluate.labeledPairs(labeled), assign)
-      .head().getAs[Double]("f1")
-    info(s"chain-only f1=$f1 metrics=${metrics.head()}")
+    val res = Pipeline.run(spark, pages, gold, cfg)
+    val f1 = res.f1.head().getAs[Double]("f1")
+    info(s"chain-only f1=$f1 metrics=${res.metrics.head()}")
+    res.mentions.unpersist(); res.assignments.unpersist()
     assert(f1 >= 0.98, s"chain-tier recall degraded: $f1")
+  }
+
+  test("Pipeline.run and ResumablePipeline.run assign the same clusters, on commit and on replay") {
+    val gen = CorpusGen.generate(spark, 600L, 120L).cache()
+    val res = Pipeline.run(spark, CorpusGen.pages(gen), CorpusGen.gold(gen))
+    val inMemory = res.assignments.as[(Long, Long)].collect().sorted.toSeq
+    val store = new SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("nelspark-store").toString)
+    def stored() = ResumablePipeline.run(spark, store, CorpusGen.pages(gen))
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(stored() == inMemory) // commit
+    assert(stored() == inMemory) // replay
+    assert(store.snapshots.get.count() == 5L)
+    res.mentions.unpersist(); res.assignments.unpersist(); gen.unpersist()
+  }
+
+  test("runners keep the caller's job description on every job they launch") {
+    val gen = CorpusGen.generate(spark, 300L, 60L).cache()
+    val small = CorpusGen.pages(gen)
+    val store = new SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("nelspark-store").toString)
+    val (_, descriptions) = jobDescriptions {
+      spark.sparkContext.setJobDescription("caller span")
+      try {
+        val res = Pipeline.run(spark, small, CorpusGen.gold(gen))
+        res.f1.collect()
+        res.mentions.unpersist(); res.assignments.unpersist()
+        ResumablePipeline.run(spark, store, small).collect() // commit
+        ResumablePipeline.run(spark, store, small).collect() // replay
+      } finally spark.sparkContext.setJobDescription(null)
+    }
+    gen.unpersist()
+    assert(descriptions.nonEmpty)
+    assert(descriptions.forall(_ == "caller span"), descriptions.distinct)
   }
 
   test("Tfidf.pageVectors launches no job at DAG-construction time") {

@@ -96,6 +96,20 @@ class SnapshotSpec extends SparkSpec {
     assert(perSnapshot == Map(1L -> 1L, 2L -> 1L))
   }
 
+  test("pairs metrics are recorded under the pairs snapshot id") {
+    val root = tmpRoot()
+    val gen = CorpusGen.generate(spark, 300L, 60L).cache()
+    val pages = CorpusGen.pages(gen)
+    val store = new SnapshotStore(spark, root)
+    ResumablePipeline.run(spark, store, pages)
+    import scala.reflect.io.Directory
+    new Directory(new java.io.File(s"$root/pairs")).deleteRecursively()
+    ResumablePipeline.run(spark, store, pages)
+    val perSnapshot = store.metrics.get.filter(col("stage") === "pairs")
+      .groupBy("snapshot_id").count().as[(Long, Long)].collect().toMap
+    assert(perSnapshot == Map(1L -> 4L, 2L -> 4L))
+  }
+
   test("a store rooted at a file: URI finds its log and replays") {
     val root = "file:" + tmpRoot()
     val gen = CorpusGen.generate(spark, 300L, 60L).cache()

@@ -32,24 +32,33 @@ abstract class SparkSpec extends AnyFunSuite {
     assert(res.passed, s"property failed: ${res.status}")
   }
 
-  /** `f`'s result and the number of Spark jobs it launched. The job-group
-    * id is thread-local and stamped into each job's properties, so jobs
-    * of concurrent suites sharing the session are not counted. */
+  /** `f`'s result and the number of Spark jobs it launched. */
   def countJobs[T](f: => T): (T, Int) = {
+    val (out, descriptions) = jobDescriptions(f)
+    (out, descriptions.size)
+  }
+
+  /** `f`'s result and the description of each Spark job it launched. The
+    * job-group id is thread-local and stamped into each job's properties,
+    * so jobs of concurrent suites sharing the session are not counted.
+    * Setting the group sets the description to "job-count probe"; `f` may
+    * set its own. */
+  def jobDescriptions[T](f: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"job-count-probe-${java.util.UUID.randomUUID}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (j.properties != null && group == j.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet(): Unit
+          descriptions.add(String.valueOf(j.properties.getProperty("spark.job.description"))): Unit
     }
     sc.addSparkListener(l)
     sc.setJobGroup(group, "job-count probe")
     try {
       val out = f
       org.apache.spark.sql.NelShim.waitForListenerBus(spark)
-      (out, jobs.get)
+      import scala.jdk.CollectionConverters._
+      (out, descriptions.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(l)
