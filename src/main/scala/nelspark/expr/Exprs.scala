@@ -360,6 +360,12 @@ case class NearestCells(child: Expression, centroids: Array[Array[Float]], nprob
   }
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "nearest_cells"
+  // the matrix prints as its shape and a content hash: an array prints by
+  // JVM identity, so plan dumps of the same model would never match
+  override protected def stringArgs: Iterator[Any] = {
+    val hash = java.util.Arrays.deepHashCode(centroids.asInstanceOf[Array[AnyRef]])
+    Iterator(child, f"${centroids.length}x${centroids.headOption.fold(0)(_.length)}:$hash%08x", nprobe)
+  }
 }
 
 /** Character-set Jaccard (DuckDB `jaccard()` semantics). */

@@ -21,8 +21,10 @@ import org.apache.spark.sql.types._
  *   root/_metrics/                                -- per-stage metrics
  *
  * Resume contract: a stage snapshot is reusable iff its recorded
- * `conf` hash (pipeline config + input snapshot ids) matches the
- * requested one. `runStage` either replays the latest valid snapshot or
+ * `conf` hash (pipeline config) and `input_snapshot` (the id of the
+ * upstream snapshot it was built from) both match the requested ones, so
+ * a recomputed stage recomputes every stage downstream of it.
+ * `runStage` either replays the latest valid snapshot or
  * computes, commits and returns a freshly-read frame (so downstream
  * lineage is cut at the parquet boundary — plans never grow unbounded).
  *
@@ -91,14 +93,16 @@ class SnapshotStore(spark: SparkSession, root: String) {
   def refresh(): Unit = {
     import spark.implicits._
     log = Some(snapshots.fold(Vector.empty[LogEntry])(
-      _.select("stage", "conf", "snapshot_id").as[LogEntry].collect().toVector))
+      _.select("stage", "conf", "input_snapshot", "snapshot_id").as[LogEntry].collect().toVector))
   }
 
   /** The _snapshots log (None when no snapshot committed yet). */
   def snapshots: Option[DataFrame] = readOpt(dir("_snapshots"), Some(LogSchema))
 
-  def latest(stage: String, conf: String): Option[(Long, DataFrame)] =
-    entries.filter(e => e.stage == stage && e.conf == conf).map(_.snapshot_id).maxOption
+  /** The newest snapshot of `stage` built with `conf` from `inputSnapshot`. */
+  def latest(stage: String, conf: String, inputSnapshot: Long): Option[(Long, DataFrame)] =
+    entries.filter(e => e.stage == stage && e.conf == conf && e.input_snapshot == inputSnapshot)
+      .map(_.snapshot_id).maxOption
       .flatMap(id => readSnapshot(dir(stage, s"snapshot=$id")).map(df => (id, df)))
 
   /** Commit one stage output as the next snapshot; returns (id, re-read). */
@@ -124,7 +128,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
     append("_snapshots", LogSchema, Seq(Row(id, stage, inputSnapshot,
       perPartition.map(_._2).sum, wallMs, conf,
       new java.sql.Timestamp(System.currentTimeMillis()))))
-    log = Some(entries :+ LogEntry(stage, conf, id))
+    log = Some(entries :+ LogEntry(stage, conf, inputSnapshot, id))
     (id, back)
   }
 
@@ -133,7 +137,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
   def runStage(stage: String, conf: String, inputSnapshot: Long = -1L,
       onCommit: (Long, DataFrame) => Unit = (_, _) => ())
       (compute: => DataFrame): (Long, DataFrame) =
-    latest(stage, conf).getOrElse {
+    latest(stage, conf, inputSnapshot).getOrElse {
       val (id, back) = commit(stage, compute, conf, inputSnapshot)
       onCommit(id, back)
       (id, back)
@@ -157,7 +161,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
 object SnapshotStore {
 
   /** One `_snapshots` row as the driver-side log keeps it. */
-  final case class LogEntry(stage: String, conf: String, snapshot_id: Long)
+  final case class LogEntry(stage: String, conf: String, input_snapshot: Long, snapshot_id: Long)
 
   /** Schemas of the bookkeeping tables. Column order and nullability are
     * those the tables have always been written with. */
@@ -198,8 +202,9 @@ object ResumablePipeline {
    * committed as a snapshot whose input is the previous stage's snapshot.
    * A rerun over the same store replays every committed stage
    * (byte-identical outputs) and recomputes only missing or
-   * config-invalidated ones. A committed stage records its metrics under
-   * its own snapshot id; `clusters` also records `n_clusters`.
+   * config-invalidated ones, and every stage downstream of them. A
+   * committed stage records its metrics under its own snapshot id;
+   * `clusters` also records `n_clusters`.
    */
   def run(spark: SparkSession, store: SnapshotStore, pages: DataFrame,
       cfg: ErConfig = ErConfig()): DataFrame = {

@@ -1,6 +1,6 @@
 package nelspark.util
 
-/** Minimal JSON string escaping shared by the bench/verify/serving
+/** Minimal JSON string escaping shared by the bench and verify
   * emitters (no JSON library ships in this environment). */
 object Json {
   def str(s: String): String = "\"" + s.flatMap {

@@ -14,7 +14,7 @@ class FanOutSpec extends nelspark.SparkSpec {
   test("fanOut sizes a scan on a non-file: file system") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.nelfs.impl", classOf[OtherSchemeFileSystem].getName)
-    val dir = java.nio.file.Files.createTempDirectory("nelspark-fanout").toString
+    val dir = tempDir("nelspark-fanout")
     spark.range(100).write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(s"nelfs://$dir")
     assert(df.inputFiles.nonEmpty && df.inputFiles.forall(_.startsWith("nelfs:")))

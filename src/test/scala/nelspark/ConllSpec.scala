@@ -63,7 +63,7 @@ class ConllSpec extends SparkSpec {
     val p = "/tmp/conll_spec_fixture_mf.tsv"
     Conll.ensureFixture(spark, "/root/testdata/sf0.001/documents.parquet", p, 20)
     val lines = Files.readAllLines(java.nio.file.Paths.get(p))
-    val dir = Files.createTempDirectory("conll_mf")
+    val dir = java.nio.file.Paths.get(tempDir("conll_mf"))
     // cut at arbitrary line offsets — NOT doc boundaries — so shards 2/3
     // begin mid-doc (and possibly mid-mention): their leading tokens must
     // land in the previous shard's last doc via the boundary-offset join

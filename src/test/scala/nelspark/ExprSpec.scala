@@ -148,6 +148,18 @@ class ExprSpec extends SparkSpec {
     assert(m.toSeq == Seq("Big Apple"))
   }
 
+  test("nearest_cells prints its centroids by content, not by array identity") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
+    val v = Literal.create(null, ArrayType(FloatType))
+    def cells(cent: Array[Array[Float]]) = nelspark.expr.NearestCells(v, cent, 2).toString
+    val a = cells(Array(Array(1f, 0f, 0f), Array(0f, 1f, 0f)))
+    val b = cells(Array(Array(1f, 0f, 0f), Array(0f, 1f, 0f)))
+    assert(a == b)
+    assert(!a.contains("[F@") && a.contains("2x3:") && a.endsWith(", 2)"), a)
+    assert(cells(Array(Array(1f, 0f, 0f), Array(0f, 0f, 1f))) != a)
+  }
+
   test("SQL registration exposes functions to spark.sql") {
     functions.registerAll(spark)
     val r = spark.sql("SELECT jaro_winkler('MARTHA','MARHTA') AS jw, normalize_name('José') AS nn")

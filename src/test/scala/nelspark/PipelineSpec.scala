@@ -115,8 +115,7 @@ class PipelineSpec extends SparkSpec {
     val gen = CorpusGen.generate(spark, 600L, 120L).cache()
     val res = Pipeline.run(spark, CorpusGen.pages(gen), CorpusGen.gold(gen))
     val inMemory = res.assignments.as[(Long, Long)].collect().sorted.toSeq
-    val store = new SnapshotStore(spark,
-      java.nio.file.Files.createTempDirectory("nelspark-store").toString)
+    val store = new SnapshotStore(spark, tempDir("nelspark-store"))
     def stored() = ResumablePipeline.run(spark, store, CorpusGen.pages(gen))
       .as[(Long, Long)].collect().sorted.toSeq
     assert(stored() == inMemory) // commit
@@ -128,8 +127,7 @@ class PipelineSpec extends SparkSpec {
   test("runners keep the caller's job description on every job they launch") {
     val gen = CorpusGen.generate(spark, 300L, 60L).cache()
     val small = CorpusGen.pages(gen)
-    val store = new SnapshotStore(spark,
-      java.nio.file.Files.createTempDirectory("nelspark-store").toString)
+    val store = new SnapshotStore(spark, tempDir("nelspark-store"))
     val (_, descriptions) = jobDescriptions {
       spark.sparkContext.setJobDescription("caller span")
       try {

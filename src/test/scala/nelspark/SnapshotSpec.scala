@@ -11,8 +11,7 @@ import java.nio.file.Files
 class SnapshotSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpRoot(): String =
-    Files.createTempDirectory("nelspark-store").toString
+  private def tmpRoot(): String = tempDir("nelspark-store")
 
   test("stage snapshots replay instead of recompute; clusters identical across resume") {
     val root = tmpRoot()
@@ -110,6 +109,27 @@ class SnapshotSpec extends SparkSpec {
     assert(perSnapshot == Map(1L -> 4L, 2L -> 4L))
   }
 
+  test("a recomputed stage recomputes its downstream stages instead of replaying them") {
+    val root = tmpRoot()
+    val gen = CorpusGen.generate(spark, 300L, 60L).cache()
+    val pages = CorpusGen.pages(gen)
+    val store = new SnapshotStore(spark, root)
+    val run1 = ResumablePipeline.run(spark, store, pages)
+      .as[(Long, Long)].collect().sorted.toSeq
+    import scala.reflect.io.Directory
+    new Directory(new java.io.File(s"$root/pairs")).deleteRecursively()
+    val run2 = ResumablePipeline.run(spark, store, pages)
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(run2 == run1)
+    val newest = store.snapshots.get
+      .groupBy("stage").agg(max(struct("snapshot_id", "input_snapshot")).as("s"))
+      .select($"stage", $"s.snapshot_id", $"s.input_snapshot")
+      .as[(String, Long, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    assert(newest("extract") == (1L, -1L) && newest("mentions") == (1L, 1L))
+    assert(newest("pairs") == (2L, 1L))
+    assert(newest("edges") == (2L, 2L) && newest("clusters") == (2L, 2L))
+  }
+
   test("a store rooted at a file: URI finds its log and replays") {
     val root = "file:" + tmpRoot()
     val gen = CorpusGen.generate(spark, 300L, 60L).cache()
@@ -143,9 +163,11 @@ class SnapshotSpec extends SparkSpec {
     assert(replayed.schema == committed.schema)
     // snapshots read with their footer schema see what inference sees
     val ch = ResumablePipeline.confHash(ErConfig())
+    var input = -1L
     for (stage <- Seq("extract", "mentions", "pairs", "edges", "clusters")) {
-      val (id, df) = store.latest(stage, ch).get
+      val (id, df) = store.latest(stage, ch, input).get
       assert(df.schema == spark.read.parquet(s"$root/$stage/snapshot=$id").schema, stage)
+      input = id
     }
   }
 }

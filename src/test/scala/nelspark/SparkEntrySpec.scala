@@ -148,7 +148,7 @@ class SparkEntrySpec extends SparkSpec {
     val messy = Seq((1L, "  the  spark \t table holds a customer  query "),
       (2L, "\nwindow   of\tspark customer rows"))
     def run(docs: Seq[(Long, String)]): Seq[String] = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_ws").toString
+      val dir = tempDir("graft_ws")
       docs.toDF("doc_id", "text").write.mode("overwrite")
         .parquet(s"$dir/documents.parquet")
       graft.SparkEntry.queries("q_mentions")(spark, dir)

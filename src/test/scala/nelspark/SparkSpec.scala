@@ -1,6 +1,7 @@
 package nelspark
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session). */
@@ -12,7 +13,6 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -20,8 +20,21 @@ object TestSpark {
   }
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]
+
+  /** A fresh temp directory, deleted with its contents when the suite ends. */
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => new scala.reflect.io.Directory(d).deleteRecursively(): Unit)
+    finally super.afterAll()
 
   /** Run a ScalaCheck property with a fixed seed (deterministic CI). */
   def checkProp(p: org.scalacheck.Prop, n: Int = 100): Unit = {
