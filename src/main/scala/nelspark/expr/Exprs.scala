@@ -87,20 +87,6 @@ object ExprHelpers {
     }
     dot
   }
-
-  def sparseDot(a: ArrayData, b: ArrayData): Double = {
-    var i = 0; var j = 0
-    val na = a.numElements(); val nb = b.numElements()
-    var dot = 0.0
-    while (i < na && j < nb) {
-      val ra = a.getStruct(i, 2); val rb = b.getStruct(j, 2)
-      val ha = ra.getLong(0); val hb = rb.getLong(0)
-      if (ha == hb) { dot += ra.getDouble(1) * rb.getDouble(1); i += 1; j += 1 }
-      else if (ha < hb) i += 1
-      else j += 1
-    }
-    dot
-  }
 }
 
 /** Jaro-Winkler similarity (SURVEY.md §2.7 F4). DuckDB-pinned semantics. */
@@ -262,26 +248,6 @@ case class ExtractMentions(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"nelspark.expr.ExprHelpers.mentions($c)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "extract_mentions"
-}
-
-/**
- * Sparse dot product of two term vectors packed as
- * array<struct<h:long, w:double>> SORTED by h ascending. A linear merge
- * scan — replaces the explode→join-on-term→re-aggregate plan for pair
- * cosine (SURVEY.md §2.3 J3) with a single scalar expression, removing
- * the quadratic row blow-up from the shuffle.
- */
-case class SparseDotSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ExprHelpers.sparseDot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"nelspark.expr.ExprHelpers.sparseDot($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-  override def prettyName: String = "sparse_dot"
 }
 
 /**

@@ -66,9 +66,6 @@ object functions {
   /** Character-set Jaccard (DuckDB `jaccard()` semantics). */
   def char_jaccard(a: Column, b: Column): Column = c(CharSetJaccard(e(a), e(b)))
 
-  /** Merge-scan sparse dot over h-sorted array<struct<h,w>> vectors. */
-  def sparse_dot(a: Column, b: Column): Column = c(SparseDotSorted(e(a), e(b)))
-
   /** Merge-scan sparse dot over parallel primitive (hash, weight) arrays. */
   def sparse_dot_arrays(ha: Column, wa: Column, hb: Column, wb: Column): Column =
     c(SparseDotArrays(e(ha), e(wa), e(hb), e(wb)))

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.xbean.asm9.{ClassReader, ClassWriter}
 import nelspark.functions._
 
 /**
@@ -21,11 +22,12 @@ import nelspark.functions._
  * engines read the same fixture bytes, a stale fixture from an older
  * kernel version would satisfy the oracle vacuously. Each fixture dir
  * therefore carries a `_FIXTURE_TAG` sidecar = md5(generation params |
- * md5 of every compiled class under [[kernelPackages]] | input parquet
- * file metadata). A recompiled kernel, changed params, or regenerated input
- * all change the tag, and a mismatch regenerates the fixture atomically
- * (temp dir + rename, the Conll.ensureShards contract) — no manual `rm`
- * needed, and readers never observe a half-written fixture.
+ * md5 of every compiled class under [[kernelPackages]], debug attributes
+ * dropped | input parquet file metadata). A recompiled kernel, changed
+ * params, or regenerated input all change the tag, and a mismatch
+ * regenerates the fixture atomically (temp dir + rename, the
+ * Conll.ensureShards contract) — no manual `rm` needed, and readers
+ * never observe a half-written fixture.
  */
 object Fixtures {
 
@@ -39,12 +41,11 @@ object Fixtures {
   private val kernelPackages = Seq("nelspark/expr/", "nelspark/ann/",
     "nelspark/media/", "nelspark/sources/", "nelspark/gen/")
 
-  /** md5 over all compiled class bytes under [[kernelPackages]]
-    * (sorted). Any recompile of fixture-producing code — even one
-    * producing subtly different hashes — yields a new tag. Works from a
-    * classes dir (sbt) or a jar (spark-submit). */
+  /** [[classesHash]] of every compiled class under [[kernelPackages]]
+    * (sorted). Any recompile of fixture-producing code that changes its
+    * bytecode — even one producing subtly different hashes — yields a new
+    * tag. Works from a classes dir (sbt) or a jar (spark-submit). */
   private lazy val kernelHash: String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
     val loc = new File(nelspark.expr.Kernels.getClass
       .getProtectionDomain.getCodeSource.getLocation.toURI)
     import scala.jdk.CollectionConverters._
@@ -53,7 +54,7 @@ object Fixtures {
       // classes dir, so dir and jar execution hash the same class files
       // (subpackages included) in the same (global) order
       val base = loc.toPath
-      kernelPackages.flatMap { pkg =>
+      classesHash(kernelPackages.flatMap { pkg =>
         val dir = base.resolve(pkg)
         if (!Files.isDirectory(dir)) Nil
         else {
@@ -63,24 +64,29 @@ object Fixtures {
             .map(p => (base.relativize(p).iterator().asScala.mkString("/"), p)).toList
           finally walk.close()
         }
-      }.sortBy(_._1)
-        .foreach { case (_, p) => md.update(Files.readAllBytes(p)) }
+      }.sortBy(_._1).iterator.map { case (_, p) => Files.readAllBytes(p) })
     } else {
       val zip = new java.util.zip.ZipFile(loc)
-      try {
-        zip.entries().asScala
-          .filter(e => kernelPackages.exists(e.getName.startsWith) &&
-            e.getName.endsWith(".class"))
-          .toSeq.sortBy(_.getName)
-          .foreach { e =>
-            val is = zip.getInputStream(e)
-            try {
-              val buf = new Array[Byte](8192)
-              var r = is.read(buf)
-              while (r > 0) { md.update(buf, 0, r); r = is.read(buf) }
-            } finally is.close()
-          }
-      } finally zip.close()
+      try classesHash(zip.entries().asScala
+        .filter(e => kernelPackages.exists(e.getName.startsWith) &&
+          e.getName.endsWith(".class"))
+        .toSeq.sortBy(_.getName).iterator.map { e =>
+          val is = zip.getInputStream(e)
+          try is.readAllBytes() finally is.close()
+        })
+      finally zip.close()
+    }
+  }
+
+  /** md5 over class files with their debug attributes (line numbers,
+    * local-variable tables, source file) dropped, so the hash moves when
+    * bytecode does, not when an edit shifts the lines of a class. */
+  private[nelspark] def classesHash(classes: Iterator[Array[Byte]]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    classes.foreach { bytes =>
+      val w = new ClassWriter(0)
+      new ClassReader(bytes).accept(w, ClassReader.SKIP_DEBUG)
+      md.update(w.toByteArray)
     }
     md.digest().map("%02x".format(_)).mkString
   }

@@ -1,6 +1,7 @@
 package nelspark.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import nelspark.functions._
 
@@ -109,10 +110,13 @@ object Block {
    *
    *  - sz ≤ cliqueMax          → full clique via self equi-join (quadratic
    *                              but bounded: ≤ cliqueMax² pairs per key);
-   *  - cliqueMax < sz ≤ chainMax → windowed chain pairs inside context-LSH
-   *                              sub-blocks: each mention joins its next
-   *                              `chainWindow` neighbors ordered by id
-   *                              within (block_key, ctx-minhash component).
+   *  - cliqueMax < sz ≤ chainMax → chain pairs inside context-LSH
+   *                              sub-blocks (block_key, ctx-minhash
+   *                              component), from ONE window ordered by
+   *                              id: each mention pairs with its next
+   *                              `chainWindow` neighbors (window pairs),
+   *                              and every later mention with the first
+   *                              `chainWindow` (anchor pairs).
    *                              Linear in block size; connected components
    *                              recovers the full cluster from the chain.
    *                              This is what keeps Zipfian head names
@@ -132,9 +136,7 @@ object Block {
     // + block_key sort are exactly what the tier-1 self-join below needs,
     // so it runs exchange-free (guide §2.4: share one exchange between
     // operations keyed the same way).
-    val k2 = keys.withColumn("sz",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window
-        .partitionBy("block_key")))
+    val k2 = keys.withColumn("sz", count(lit(1)).over(Window.partitionBy("block_key")))
 
     // tier 1: bounded cliques
     val small = k2.filter(col("sz") <= cfg.cliqueMax)
@@ -159,41 +161,28 @@ object Block {
       .join(mentions.select("mention_id", "ctx_sig"), Seq("mention_id"))
       .select(col("block_key"), col("mention_id"), col("name_norm"), col("url"),
         posexplode(col("ctx_sig")).as(Seq("bi", "bv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("block_key", "bi", "bv").orderBy("mention_id")
-    val rn = mega.withColumn("rn", row_number().over(w))
-    val rnA = rn.select(col("block_key"), col("bi"), col("bv"),
-      col("mention_id").as("a_id"), col("name_norm").as("a_norm"),
-      col("url").as("a_url"), col("rn").as("ra"))
-    val rnB = rn.select(col("block_key"), col("bi"), col("bv"),
-      col("mention_id").as("b_id"), col("name_norm").as("b_norm"),
-      col("url").as("b_url"), col("rn").as("rb"))
-    // window pairs (local robustness) ∪ anchor/hub pairs (first W rows
-    // pair with every member → component diameter ≈ 2, so connected
-    // components converges in O(1) rounds instead of O(log blockSize)).
-    // CRITICAL plan shape: the rank predicate must be part of the
-    // equi-join key. A join on (block_key,bi,bv) alone followed by a
-    // rank-range filter makes SMJ emit the FULL n² cross product of each
-    // sub-block before filtering — a hidden quadratic that dominated the
-    // bench (hot sub-blocks of 4.5k rows → 20M-row join groups). Explode
-    // the W target ranks on the build side and join on (…, rn) exactly:
-    // every join group has size 1 and the stage is linear in block size.
-    val windowPairs = rnA
-      .select(col("block_key"), col("bi"), col("bv"), col("a_id"),
-        col("a_norm"), col("a_url"),
-        explode(sequence(col("ra") + 1, col("ra") + cfg.chainWindow)).as("rb"))
-      .join(rnB, Seq("block_key", "bi", "bv", "rb"))
-    val anchorPairs = rnB
-      .filter(col("rb") > cfg.chainWindow + 1) // rb ≤ W+1 covered by window
-      .select(col("block_key"), col("bi"), col("bv"), col("b_id"),
-        col("b_norm"), col("b_url"),
-        explode(sequence(lit(1), lit(cfg.chainWindow))).as("ra"))
-      .join(rnA, Seq("block_key", "bi", "bv", "ra"))
-    val chains = windowPairs
-      .select("a_id", "b_id", "a_norm", "b_norm", "a_url", "b_url")
-      .unionByName(anchorPairs
-        .select("a_id", "b_id", "a_norm", "b_norm", "a_url", "b_url"))
-      // ordered by mention_id ⇒ a_id < b_id
+    // One window per sub-block, ordered by id: each row pairs with its
+    // next `chainWindow` rows (local robustness), and every row past
+    // W+1 also pairs with the first W rows (anchor/hub pairs: component
+    // diameter ≈ 2, so connected components converges in O(1) rounds
+    // instead of O(log blockSize)). Rows 2..W+1 already reach the first
+    // W rows through the window pairs. Ordered by mention_id ⇒ a_id < b_id.
+    val w = Window.partitionBy("block_key", "bi", "bv").orderBy("mention_id")
+    val fromStart = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val m = struct(col("mention_id").as("id"), col("name_norm").as("norm"), col("url"))
+    def pair(a: Column, b: Column): Column = struct(a.as("a"), b.as("b"))
+    val ks = 1 to cfg.chainWindow
+    val pastWindow = row_number().over(w) > cfg.chainWindow + 1
+    val chains = mega
+      .select(array(
+        ks.map(k => pair(m, lead(m, k).over(w))) ++
+          ks.map(k => when(pastWindow, pair(nth_value(m, k).over(fromStart), m))): _*)
+        .as("ps"))
+      .select(explode(col("ps")).as("p"))
+      .filter(col("p.b").isNotNull)
+      .select(col("p.a.id").as("a_id"), col("p.b.id").as("b_id"),
+        col("p.a.norm").as("a_norm"), col("p.b.norm").as("b_norm"),
+        col("p.a.url").as("a_url"), col("p.b.url").as("b_url"))
 
     val p = clique.unionByName(chains)
       .dropDuplicates("a_id", "b_id") // dedupe BEFORE scoring (SET2 barrier)
@@ -238,14 +227,13 @@ object Tfidf {
     // groupBy(term) agg + join-back pair, and the tf subtree (tokenize +
     // explode + first agg) is computed once instead of twice.
     val weighted = terms
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("term")))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
       .crossJoin(broadcast(nDf))
       .withColumn("w",
         col("tf") * (log((col("n_docs") + 1.0) / (col("df") + 1.0)) + 1.0))
     val topped = weighted
-      .withColumn("rk", row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("url").orderBy(desc("w"), asc("term"))))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("url").orderBy(desc("w"), asc("term"))))
       .filter(col("rk") <= topK)
     // pack: re-normalize over kept terms, sort by term hash for merge scan
     topped
@@ -313,39 +301,33 @@ object Score {
  * connected components on DataFrames (Kiveris et al., "Connected
  * Components in MapReduce and Beyond", SoCC 2014). O(log n) rounds;
  * per-round localCheckpoint truncates lineage. No GraphFrames / no RDDs.
+ * Each star step reads its neighbourhood minimum from one window over
+ * its edges (no aggregate joined back onto them), then dedupes.
  */
 object Cluster {
 
-  private def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.select(col("a_id").as("u"), col("b_id").as("v"))
+  private def largeStar(e: DataFrame): DataFrame =
+    e.select(col("a_id").as("u"), col("b_id").as("v"))
       .unionAll(e.select(col("b_id").as("u"), col("a_id").as("v")))
-    val mins = sym.groupBy("u").agg(min("v").as("mn"))
-    sym.join(mins, "u")
+      .withColumn("mn", min("v").over(Window.partitionBy("u")))
       .filter(col("v") > col("u"))
       .select(col("v").as("a_id"), least(col("mn"), col("u")).as("b_id"))
       .filter(col("a_id") =!= col("b_id"))
       .dropDuplicates("a_id", "b_id")
-  }
 
-  private def smallStar(e: DataFrame): DataFrame = {
-    val oriented = e.select(
-      greatest(col("a_id"), col("b_id")).as("u"),
-      least(col("a_id"), col("b_id")).as("v"))
-    val mins = oriented.groupBy("u").agg(min("v").as("mn"))
-    val part1 = oriented.join(mins, "u")
-      .filter(col("v") =!= col("mn"))
-      .select(col("v").as("a_id"), col("mn").as("b_id"))
-    val part2 = mins.select(col("u").as("a_id"), col("mn").as("b_id"))
-    part1.unionAll(part2)
+  /** Emits (v, mn) for each edge and (u, mn) for each node u; the
+    * self-edge (mn, mn) is filtered out. */
+  private def smallStar(e: DataFrame): DataFrame =
+    e.select(
+        greatest(col("a_id"), col("b_id")).as("u"),
+        least(col("a_id"), col("b_id")).as("v"))
+      .withColumn("mn", min("v").over(Window.partitionBy("u")))
+      .select(explode(array(
+        struct(col("v").as("a_id"), col("mn").as("b_id")),
+        struct(col("u").as("a_id"), col("mn").as("b_id")))).as("e"))
+      .select("e.a_id", "e.b_id")
       .filter(col("a_id") =!= col("b_id"))
       .dropDuplicates("a_id", "b_id")
-  }
-
-  private def checksum(e: DataFrame): (Long, Long) = {
-    // bit_xor: order-independent, overflow-free (ANSI-safe) edge-set hash
-    val r = e.agg(count("*"), expr("bit_xor(xxhash64(a_id, b_id))")).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
 
   /** The alternating large/small-star fixpoint is exactly a star forest:
     * every child has ONE parent (count == distinct a_id) and no parent is

@@ -20,7 +20,7 @@ class ConllSpec extends SparkSpec {
         |7	hello	O
         |8	Bob	B-ENT
         |""".stripMargin
-    val f = Files.createTempFile("conll_spec", ".tsv")
+    val f = java.nio.file.Paths.get(tempDir("conll_spec"), "in.tsv")
     Files.writeString(f, tsv)
 
     val toks = Conll.tokens(spark, f.toString)
@@ -51,7 +51,7 @@ class ConllSpec extends SparkSpec {
         "2\t\"Quoted\tB-ENT\n" +
         "3\tback\\slash\tI-ENT\n" +
         "4\tplain\tO\n"
-    val f = Files.createTempFile("conll_quote", ".tsv")
+    val f = java.nio.file.Paths.get(tempDir("conll_quote"), "in.tsv")
     Files.writeString(f, tsv)
     val toks = Conll.tokens(spark, f.toString)
       .orderBy("line_no").collect().map(_.getString(1)).toSeq

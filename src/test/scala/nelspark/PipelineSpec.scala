@@ -111,6 +111,34 @@ class PipelineSpec extends SparkSpec {
     assert(f1 >= 0.98, s"chain-tier recall degraded: $f1")
   }
 
+  test("chain tier emits exactly the window and anchor pairs of each sub-block") {
+    // one name block of 9 (> cliqueMax: chained; its LSH blocks purged),
+    // sub-blocked by context signature into ids 1-5 and ids 6-9
+    val cfg = ErConfig(cliqueMax = 2, chainWindow = 3)
+    val w = cfg.chainWindow
+    val subBlocks = Seq((1L to 5L, Seq(1L, 2L, 3L, 4L)), (6L to 9L, Seq(5L, 6L, 7L, 8L)))
+    val mentions = subBlocks.flatMap { case (ids, sig) =>
+      ids.map(id => (id, "acme corp", s"u$id", sig))
+    }.toDF("mention_id", "name_norm", "url", "ctx_sig")
+    val (pairs, metrics) = Block.pairs(Block.keys(mentions, cfg), mentions, cfg)
+    val got = pairs.select("a_id", "b_id", "a_norm", "b_norm", "a_url", "b_url")
+      .as[(Long, Long, String, String, String, String)].collect().sorted.toSeq
+    // (window pairs, anchor pairs) of one id-ordered sub-block
+    def chain(ids: IndexedSeq[Long]) = (
+      for (i <- ids.indices; j <- i + 1 to i + w if j < ids.size) yield (ids(i), ids(j)),
+      for (j <- ids.indices if j > w; i <- 0 until w) yield (ids(i), ids(j)))
+    assert(chain(1L to 5L)._2 == Seq((1L, 5L), (2L, 5L), (3L, 5L)))
+    val expected = subBlocks.flatMap { case (ids, _) =>
+      val (window, anchor) = chain(ids)
+      window ++ anchor
+    }.distinct.map { case (a, b) => (a, b, "acme corp", "acme corp", s"u$a", s"u$b") }.sorted
+    assert(got == expected)
+    val m = metrics.head()
+    assert((m.getAs[Long]("n_blocks"), m.getAs[Long]("n_chained"),
+      m.getAs[Long]("n_purged"), m.getAs[Long]("max_block")) ==
+      (1L + cfg.bands, 1L, cfg.bands.toLong, 9L))
+  }
+
   test("Pipeline.run and ResumablePipeline.run assign the same clusters, on commit and on replay") {
     val gen = CorpusGen.generate(spark, 600L, 120L).cache()
     val res = Pipeline.run(spark, CorpusGen.pages(gen), CorpusGen.gold(gen))

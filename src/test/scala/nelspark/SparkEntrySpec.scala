@@ -107,6 +107,34 @@ class SparkEntrySpec extends SparkSpec {
     assert(new java.io.File(dir, "_SUCCESS").exists() && rows() == fresh)
   }
 
+  test("fixture kernel hash ignores line numbers, not bytecode") {
+    import nelspark.gen.Fixtures
+    import org.apache.xbean.asm9._
+    val is = getClass.getResourceAsStream("/nelspark/expr/Kernels$.class")
+    val orig = try is.readAllBytes() finally is.close()
+    // a copy of the class rewritten by `method` at every method visit
+    def rewritten(method: MethodVisitor => MethodVisitor,
+        rename: String => String = identity): Array[Byte] = {
+      val w = new ClassWriter(0)
+      new ClassReader(orig).accept(new ClassVisitor(Opcodes.ASM9, w) {
+        override def visitMethod(access: Int, name: String, desc: String,
+            sig: String, exc: Array[String]): MethodVisitor =
+          method(super.visitMethod(access, rename(name), desc, sig, exc))
+      }, 0)
+      w.toByteArray
+    }
+    val shifted = rewritten(mv => new MethodVisitor(Opcodes.ASM9, mv) {
+      override def visitLineNumber(line: Int, start: Label): Unit =
+        super.visitLineNumber(line + 17, start)
+    })
+    val renamed = rewritten(identity,
+      name => if (name == "jaroWinkler") "jaroWinklerX" else name)
+    def hash(bytes: Array[Byte]) = Fixtures.classesHash(Iterator(bytes))
+    assert(!shifted.sameElements(orig), "line numbers were not shifted")
+    assert(hash(shifted) == hash(orig))
+    assert(hash(renamed) != hash(orig))
+  }
+
   test("leftover sweep spares a live sibling's in-flight dir (round-4 advice)") {
     import java.nio.file.{Files, Paths}
     import nelspark.gen.Fixtures

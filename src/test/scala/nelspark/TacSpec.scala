@@ -29,7 +29,7 @@ class TacSpec extends SparkSpec {
         |  </query>
         |</kbpentlink>
         |""".stripMargin
-    val f = Files.createTempFile("tac_spec", ".xml")
+    val f = java.nio.file.Paths.get(tempDir("tac_spec"), "queries.xml")
     Files.writeString(f, xml)
     val q = Tac.queries(spark, f.toString).orderBy("query_id").collect()
     assert(q.length == 2)
