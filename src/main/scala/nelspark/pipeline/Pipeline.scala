@@ -1,6 +1,6 @@
 package nelspark.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import nelspark.functions._
@@ -126,8 +126,12 @@ object Block {
    *                              SparkER block-purging bound, EDBT 2019).
    *
    * AQE skew-join splitting remains on as backstop. Returns (pairs, metrics).
+   * Given `facts`, the job that runs the pairs also observes the metrics
+   * row's four counts into it, from one flagged row per block of the
+   * block-size window; the returned metrics frame is the same either way.
    */
-  def pairs(keys: DataFrame, mentions: DataFrame, cfg: ErConfig): (DataFrame, DataFrame) = {
+  def pairs(keys: DataFrame, mentions: DataFrame, cfg: ErConfig,
+      facts: Option[Observation] = None): (DataFrame, DataFrame) = {
     // Block size via an unordered window count, NOT groupBy+join-back:
     // the agg+join form shuffled the keys subtree twice (once into the
     // agg, once into the join) and computed the key-generation kernels
@@ -136,7 +140,21 @@ object Block {
     // + block_key sort are exactly what the tier-1 self-join below needs,
     // so it runs exchange-free (guide §2.4: share one exchange between
     // operations keyed the same way).
-    val k2 = keys.withColumn("sz", count(lit(1)).over(Window.partitionBy("block_key")))
+    val block = Window.partitionBy("block_key")
+    val sized = keys.withColumn("sz", count(lit(1)).over(block))
+    val chained = col("pass") === "name" &&
+      col("sz") > cfg.cliqueMax && col("sz") <= cfg.chainMax
+    val purged = col("sz") > cfg.chainMax || (col("pass") === "lsh" && col("sz") > cfg.cliqueMax)
+    // the block's smallest member flags its one row; the min shares the
+    // sz window, so observing adds no exchange
+    val k2 = facts.fold(sized) { o =>
+      val first = col("first")
+      sized.withColumn("first", col("mention_id") === min("mention_id").over(block))
+        .observe(o, count(when(first, 1)).as("n_blocks"),
+        count(when(first && chained, 1)).as("n_chained"),
+        count(when(first && purged, 1)).as("n_purged"),
+        max("sz").as("max_block"))
+    }
 
     // tier 1: bounded cliques
     val small = k2.filter(col("sz") <= cfg.cliqueMax)
@@ -155,8 +173,7 @@ object Block {
     // membership ~bands× times for zero recall. LSH keeps catching typo
     // variants through its SMALL blocks (tier 1), which is its entire job.
     val mega = k2
-      .filter(col("pass") === "name" &&
-        col("sz") > cfg.cliqueMax && col("sz") <= cfg.chainMax)
+      .filter(chained)
       .select("block_key", "mention_id", "name_norm", "url")
       .join(mentions.select("mention_id", "ctx_sig"), Seq("mention_id"))
       .select(col("block_key"), col("mention_id"), col("name_norm"), col("url"),
@@ -187,15 +204,11 @@ object Block {
     val p = clique.unionByName(chains)
       .dropDuplicates("a_id", "b_id") // dedupe BEFORE scoring (SET2 barrier)
 
-    val metrics = k2.select("block_key", "pass", "sz").distinct()
+    val metrics = sized.select("block_key", "pass", "sz").distinct()
       .agg(
         count("*").as("n_blocks"),
-        sum(when(col("pass") === "name" &&
-          col("sz") > cfg.cliqueMax && col("sz") <= cfg.chainMax, 1L)
-          .otherwise(0L)).as("n_chained"),
-        sum(when(col("sz") > cfg.chainMax ||
-          (col("pass") === "lsh" && col("sz") > cfg.cliqueMax), 1L)
-          .otherwise(0L)).as("n_purged"),
+        sum(when(chained, 1L).otherwise(0L)).as("n_chained"),
+        sum(when(purged, 1L).otherwise(0L)).as("n_purged"),
         max("sz").as("max_block"))
     (p, metrics)
   }
@@ -486,12 +499,20 @@ object Evaluate {
  */
 object Linkage {
   /** A stage handed to the runner at its boundary. `frame` is built on
-    * first use, so a runner that replays the stage never builds it;
-    * `metrics` is the stage's one-row frame of counts, if it has one. */
+    * first use, so a runner that replays the stage never builds it.
+    * `observed` is the frame built instead so that the job that runs it
+    * also computes the stage facts into the returned [[Observation]]:
+    * the block counts of `pairs` and `n_clusters` of `clusters`; for the
+    * other stages it is `(frame, None)`. A runner that does not read the
+    * facts takes `frame`, whose plan carries no observation. */
   final class Stage(val name: String, build: => DataFrame,
-      metricsOf: => Option[DataFrame] = None) {
+      observe: Option[Observation => DataFrame] = None) {
     lazy val frame: DataFrame = build
-    def metrics: Option[DataFrame] = metricsOf
+    lazy val observed: (DataFrame, Option[Observation]) =
+      observe.fold((frame, Option.empty[Observation])) { f =>
+        val facts = Observation()
+        (f(facts), Some(facts))
+      }
   }
 
   /** A runner's behaviour at a stage boundary: returns the frame that the
@@ -507,13 +528,21 @@ object Linkage {
   /** `vectors` is evaluated only if `edges` is built. */
   final class Suffix(val mentions: DataFrame, vectors: => DataFrame, cfg: ErConfig,
       at: Boundary) {
-    private lazy val blocked = Block.pairs(Block.keys(mentions, cfg), mentions, cfg)
-    val pairs: DataFrame = at(new Stage("pairs", blocked._1, Some(blocked._2)))
-    def blockMetrics: DataFrame = blocked._2
+    private def blocked(facts: Option[Observation]) =
+      Block.pairs(Block.keys(mentions, cfg), mentions, cfg, facts)
+    private lazy val unobserved = blocked(None)
+    val pairs: DataFrame = at(new Stage("pairs", unobserved._1,
+      Some(facts => blocked(Some(facts))._1)))
+    def blockMetrics: DataFrame = unobserved._2
     lazy val scored: DataFrame = Score(pairs, mentions, vectors, cfg)
     val edges: DataFrame = at(new Stage("edges", Score.edges(scored, cfg)))
-    val clusters: DataFrame = at(new Stage("clusters",
-      Cluster.connectedComponents(edges, mentions.select("mention_id"), cfg)))
+    // a cluster id is its smallest member's id: one row per cluster has
+    // mention_id = cluster_id
+    private lazy val components =
+      Cluster.connectedComponents(edges, mentions.select("mention_id"), cfg)
+    val clusters: DataFrame = at(new Stage("clusters", components,
+      Some(components.observe(_,
+        count(when(col("mention_id") === col("cluster_id"), 1)).as("n_clusters")))))
   }
 
   def apply(pages: DataFrame, cfg: ErConfig)(at: Boundary): Suffix = {

@@ -1,12 +1,18 @@
 package nelspark.store
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.spark.Success
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, NelShim, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /**
  * Iceberg-style snapshot layout over parquet (SURVEY.md §7.5 — no Iceberg
@@ -16,9 +22,11 @@ import org.apache.spark.sql.types._
  *
  * Layout:
  *   root/<stage>/snapshot=<id>/part-*.parquet     -- stage output
- *   root/_snapshots/                              -- append-only parquet log
- *   root/_lineage/                                -- per-partition rows
- *   root/_metrics/                                -- per-stage metrics
+ *   root/_snapshots/<stage>-<id>.parquet          -- log row of the commit
+ *   root/_lineage/<stage>-<id>.parquet            -- a row per written partition
+ *   root/_metrics/<stage>-<id>.parquet            -- stage facts, if any
+ * Each bookkeeping table is read as its whole directory, so stores whose
+ * rows Spark appended as `part-*` files read the same.
  *
  * Resume contract: a stage snapshot is reusable iff its recorded
  * `conf` hash (pipeline config) and `input_snapshot` (the id of the
@@ -38,10 +46,15 @@ import org.apache.spark.sql.types._
  *
  * Spark jobs: a replay of the five pipeline stages runs one, the log
  * read; each snapshot is opened with the schema stored in its parquet
- * footer, which the driver reads itself. A stage commit runs the stage's
- * own jobs inside its data write, one lineage count over the written
- * files (no columns read) and two appends, `_lineage` then `_snapshots`:
- * each stage is durable as soon as its log row is written.
+ * footer, which the driver reads itself. A stage commit runs exactly the
+ * jobs of its data write. Everything it records comes out of that write:
+ * the row count and the stage facts are observed (`Dataset.observe`) by
+ * the writing job, and each write task's `recordsWritten` is the lineage
+ * row of its partition. The driver then writes the bookkeeping files
+ * itself, `_lineage`, `_metrics`, and `_snapshots` last, so a stage is
+ * durable, and replayed, only once its log row is in place. A commit that
+ * failed before that row is redone under the same id, and its files
+ * replace the failed attempt's instead of adding to them.
  */
 class SnapshotStore(spark: SparkSession, root: String) {
   import SnapshotStore._
@@ -105,60 +118,119 @@ class SnapshotStore(spark: SparkSession, root: String) {
       .map(_.snapshot_id).maxOption
       .flatMap(id => readSnapshot(dir(stage, s"snapshot=$id")).map(df => (id, df)))
 
-  /** Commit one stage output as the next snapshot; returns (id, re-read). */
-  def commit(stage: String, df: DataFrame, conf: String,
-      inputSnapshot: Long = -1L): (Long, DataFrame) = {
+  /** Commit one stage output as the next snapshot; returns (id, re-read).
+    * `facts`, when given, is filled by the job that writes `df`; its
+    * values become the snapshot's `_metrics` rows. */
+  def commit(stage: String, df: DataFrame, conf: String, inputSnapshot: Long = -1L,
+      facts: Option[Observation] = None): (Long, DataFrame) = {
     val id = entries.filter(_.stage == stage).map(_.snapshot_id).maxOption.getOrElse(0L) + 1L
     val out = dir(stage, s"snapshot=$id")
-    val t0 = System.nanoTime()
-    df.write.mode(SaveMode.Overwrite).parquet(out)
-    val wallMs = (System.nanoTime() - t0) / 1000000L
+    val counted = Observation()
+    val (wallMs, perPartition) = recordsWritten {
+      val t0 = System.nanoTime()
+      df.observe(counted, count(lit(1)).as("row_count"))
+        .write.mode(SaveMode.Overwrite).parquet(out)
+      (System.nanoTime() - t0) / 1000000L
+    }
     val back = readSnapshot(out)
       .getOrElse(throw new IllegalStateException(s"committed snapshot $out is unreadable"))
 
-    // per-partition lineage of the committed snapshot, counted in one
-    // job that reads no columns; the row count is their sum
-    import spark.implicits._
-    val perPartition = back.select(spark_partition_id()).as[Int]
-      .mapPartitions(it => if (it.hasNext) Iterator((it.next(), 1L + it.size)) else Iterator.empty)
-      .collect()
-    append("_lineage", LineageSchema,
-      perPartition.map { case (p, n) => Row(stage, id, p, -1L, n, wallMs) }.toSeq)
-
-    append("_snapshots", LogSchema, Seq(Row(id, stage, inputSnapshot,
-      perPartition.map(_._2).sum, wallMs, conf,
-      new java.sql.Timestamp(System.currentTimeMillis()))))
+    val file = s"$stage-$id.parquet"
+    writeRows("_lineage", file, LineageSchema,
+      perPartition.map { case (p, n) => Row(stage, id, p, -1L, n, wallMs) })
+    facts.map(_.get).foreach { values =>
+      writeRows("_metrics", file, MetricsSchema, values.toSeq.map { case (name, v) =>
+        Row(stage, id, name, Option(v).fold(0.0)(_.asInstanceOf[Number].doubleValue))
+      })
+    }
+    writeRows("_snapshots", file, LogSchema, Seq(Row(id, stage, inputSnapshot,
+      counted.get("row_count"), wallMs, conf, new java.sql.Timestamp(System.currentTimeMillis()))))
     log = Some(entries :+ LogEntry(stage, conf, inputSnapshot, id))
     (id, back)
   }
 
-  /** Replay-or-compute: the resumability primitive. `onCommit` runs only
-    * when the stage is computed, after its snapshot is committed. */
-  def runStage(stage: String, conf: String, inputSnapshot: Long = -1L,
-      onCommit: (Long, DataFrame) => Unit = (_, _) => ())
-      (compute: => DataFrame): (Long, DataFrame) =
-    latest(stage, conf, inputSnapshot).getOrElse {
-      val (id, back) = commit(stage, compute, conf, inputSnapshot)
-      onCommit(id, back)
-      (id, back)
+  /** Runs `write` and returns its result with the records each of its
+    * write tasks wrote, by partition id, in partition order. Its jobs are
+    * told apart from other threads' by a local property of this thread,
+    * so the caller's job group and description stay as they are. */
+  private def recordsWritten[T](write: => T): (T, Seq[(Int, Long)]) = {
+    val sc = spark.sparkContext
+    val scope = java.util.UUID.randomUUID.toString
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && scope == j.properties.getProperty(CommitScope))
+          j.stageIds.foreach(stages.add)
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.reason == Success && t.taskMetrics != null && stages.contains(t.stageId)) {
+          val n = t.taskMetrics.outputMetrics.recordsWritten
+          if (n > 0) written.put(t.taskInfo.partitionId, n): Unit
+        }
     }
-
-  /** Appends `(name, value)` metrics of one stage snapshot in one write. */
-  def addMetrics(stage: String, snapshotId: Long, metrics: (String, Double)*): Unit =
-    append("_metrics", MetricsSchema,
-      metrics.map { case (name, value) => Row(stage, snapshotId, name, value) })
-
-  private def append(table: String, schema: StructType, rows: Seq[Row]): Unit = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema).coalesce(1)
-      .write.mode(SaveMode.Append).parquet(dir(table))
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(CommitScope, scope)
+    try {
+      val out = write
+      NelShim.waitForListenerBus(spark)
+      (out, written.asScala.toSeq.sortBy(_._1))
+    } finally {
+      sc.setLocalProperty(CommitScope, null)
+      sc.removeSparkListener(listener)
+    }
   }
+
+  /** Writes `rows` as the one parquet file `table/name`, from the driver:
+    * first under a hidden name, which readers skip, then renamed into
+    * place over any file of that name. */
+  private def writeRows(table: String, name: String, schema: StructType, rows: Seq[Row]): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val target = new Path(dir(table), name)
+    val hidden = new Path(dir(table), s".$name")
+    val parquetSchema = BookkeepingParquet.convert(schema)
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(hidden, conf))
+      .withType(parquetSchema)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .withExtraMetaData(Map(ParquetReadSupport.SPARK_METADATA_KEY -> schema.json).asJava)
+      .build()
+    try rows.foreach { row =>
+      val g = new SimpleGroup(parquetSchema)
+      for (i <- schema.indices if !row.isNullAt(i)) schema(i).dataType match {
+        case StringType => g.add(i, row.getString(i))
+        case IntegerType => g.add(i, row.getInt(i))
+        case LongType => g.add(i, row.getLong(i))
+        case DoubleType => g.add(i, row.getDouble(i))
+        case TimestampType => g.add(i, row.getTimestamp(i).getTime * 1000L)
+      }
+      writer.write(g)
+    } finally writer.close()
+    val fs = target.getFileSystem(conf)
+    fs.delete(target, false)
+    if (!fs.rename(hidden, target)) throw new java.io.IOException(s"cannot rename $hidden to $target")
+  }
+
+  /** Replay-or-compute: the resumability primitive. `compute` gives the
+    * stage frame and, if it has them, its facts (see [[commit]]). */
+  def runStage(stage: String, conf: String, inputSnapshot: Long = -1L)
+      (compute: => (DataFrame, Option[Observation])): (Long, DataFrame) =
+    latest(stage, conf, inputSnapshot).getOrElse {
+      val (df, facts) = compute
+      commit(stage, df, conf, inputSnapshot, facts)
+    }
 
   def metrics: Option[DataFrame] = readOpt(dir("_metrics"), Some(MetricsSchema))
   def lineage: Option[DataFrame] = readOpt(dir("_lineage"), Some(LineageSchema))
 }
 
 object SnapshotStore {
+
+  /** The local property that marks the jobs of one commit's data write. */
+  private val CommitScope = "nelspark.store.commit"
+
+  /** Spark's own mapping of the bookkeeping schemas to parquet, with
+    * timestamps as INT64 microseconds, a type the driver can write. */
+  private val BookkeepingParquet = new SparkToParquetSchemaConverter(
+    outputTimestampType = SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS)
 
   /** One `_snapshots` row as the driver-side log keeps it. */
   final case class LogEntry(stage: String, conf: String, input_snapshot: Long, snapshot_id: Long)
@@ -203,8 +275,8 @@ object ResumablePipeline {
    * A rerun over the same store replays every committed stage
    * (byte-identical outputs) and recomputes only missing or
    * config-invalidated ones, and every stage downstream of them. A
-   * committed stage records its metrics under its own snapshot id;
-   * `clusters` also records `n_clusters`.
+   * committed stage with facts records them under its own snapshot id:
+   * the block counts for `pairs`, `n_clusters` for `clusters`.
    */
   def run(spark: SparkSession, store: SnapshotStore, pages: DataFrame,
       cfg: ErConfig = ErConfig()): DataFrame = {
@@ -212,16 +284,7 @@ object ResumablePipeline {
     store.refresh()
     var input = -1L
     Linkage(pages, cfg) { stage =>
-      val (id, df) = store.runStage(stage.name, ch, input, onCommit = (committedId, committed) => {
-        stage.metrics.foreach { m =>
-          val row = m.head()
-          store.addMetrics(stage.name, committedId,
-            m.columns.map(k => k -> row.getAs[Long](k).toDouble): _*)
-        }
-        if (stage.name == "clusters")
-          store.addMetrics("clusters", committedId,
-            "n_clusters" -> committed.select("cluster_id").distinct().count().toDouble)
-      })(stage.frame)
+      val (id, df) = store.runStage(stage.name, ch, input)(stage.observed)
       input = id
       df
     }.clusters

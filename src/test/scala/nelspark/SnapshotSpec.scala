@@ -1,8 +1,9 @@
 package nelspark
 
 import nelspark.gen.CorpusGen
-import nelspark.pipeline.ErConfig
+import nelspark.pipeline.{Block, ErConfig}
 import nelspark.store.{ResumablePipeline, SnapshotStore}
+import org.apache.spark.sql.{Observation, SaveMode}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -169,5 +170,107 @@ class SnapshotSpec extends SparkSpec {
       assert(df.schema == spark.read.parquet(s"$root/$stage/snapshot=$id").schema, stage)
       input = id
     }
+  }
+
+  test("a commit launches exactly the jobs of a plain write of its frame") {
+    val store = new SnapshotStore(spark, tmpRoot())
+    store.refresh()
+    val df = spark.range(0L, 20000L, 1L, 4)
+      .groupBy(($"id" % 97).as("k")).agg(count(lit(1)).as("n"))
+    val (_, plain) = countJobs(df.write.parquet(s"${tempDir("nelspark-plain")}/out"))
+    val (_, committed) = countJobs(store.commit("s", df, "c"))
+    assert(committed == plain)
+    val facts = Observation()
+    val (_, withFacts) = countJobs(
+      store.commit("s", df.observe(facts, max("n").as("max_n")), "c", facts = Some(facts)))
+    assert(withFacts == plain)
+    assert(store.metrics.get.as[(String, Long, String, Double)].collect().toSeq ==
+      Seq(("s", 2L, "max_n", df.agg(max("n")).head().getLong(0).toDouble)))
+  }
+
+  test("a commit redone after a crash before its log row leaves one set of bookkeeping rows") {
+    val root = tmpRoot()
+    val gen = CorpusGen.generate(spark, 300L, 60L).cache()
+    val pages = CorpusGen.pages(gen)
+    ResumablePipeline.run(spark, new SnapshotStore(spark, root), pages)
+    def rowsOut(s: SnapshotStore) = s.lineage.get.groupBy("stage", "snapshot_id")
+      .agg(count(lit(1)), sum("rows_out")).as[(String, Long, Long, Long)].collect().toSet
+    val rowsOut0 = rowsOut(new SnapshotStore(spark, root))
+    Files.delete(java.nio.file.Paths.get(s"$root/_snapshots/clusters-1.parquet"))
+
+    val store = new SnapshotStore(spark, root)
+    ResumablePipeline.run(spark, store, pages)
+    val log = store.snapshots.get.select("stage", "snapshot_id").as[(String, Long)].collect()
+    assert(log.sorted.toSeq == Seq("clusters", "edges", "extract", "mentions", "pairs").map(_ -> 1L))
+    assert(rowsOut(store) == rowsOut0)
+    assert(store.lineage.get.groupBy("stage", "snapshot_id", "partition_id").count()
+      .filter($"count" > 1).isEmpty)
+    assert(store.metrics.get.filter(col("name") === "n_clusters")
+      .select("snapshot_id").as[Long].collect().toSeq == Seq(1L))
+  }
+
+  test("observed stage facts equal the queries they replace, on a flat and a hot corpus") {
+    for ((seed, nPages, nEntities, hotFrac, hotEntities, cfg) <- Seq(
+        (1L, 1000L, 200L, 0.0, 20, ErConfig()),
+        (3L, 2000L, 400L, 0.6, 3, ErConfig(ccLocalMax = 5000L)))) {
+      val root = tmpRoot()
+      val gen = CorpusGen.generate(spark, nPages, nEntities, seed, hotFrac, hotEntities).cache()
+      val store = new SnapshotStore(spark, root)
+      val clusters = ResumablePipeline.run(spark, store, CorpusGen.pages(gen), cfg)
+      val ch = ResumablePipeline.confHash(cfg)
+      val (mentionsId, mentions) = store.latest("mentions", ch, 1L).get
+      val pairsId = store.latest("pairs", ch, mentionsId).get._1
+      val metrics = store.metrics.get.as[(String, Long, String, Double)].collect()
+
+      val block = Block.pairs(Block.keys(mentions, cfg), mentions, cfg)._2.head()
+      val observed = metrics.collect { case ("pairs", `pairsId`, name, v) => name -> v }.toMap
+      assert(observed == block.schema.fieldNames.map(k => k -> block.getAs[Long](k).toDouble).toMap,
+        s"seed $seed")
+      info(s"seed $seed block facts: $observed")
+      assert(metrics.collect { case ("clusters", _, "n_clusters", v) => v }.toSeq ==
+        Seq(clusters.select("cluster_id").distinct().count().toDouble))
+
+      val rowsOut = store.lineage.get.groupBy("stage", "snapshot_id").agg(sum("rows_out"))
+        .as[(String, Long, Long)].collect()
+      assert(rowsOut.length == 5)
+      for ((stage, id, n) <- rowsOut)
+        assert(n == spark.read.parquet(s"$root/$stage/snapshot=$id").count(), stage)
+      assert(store.snapshots.get.select("stage", "row_count").as[(String, Long)].collect().toMap ==
+        rowsOut.map(r => r._1 -> r._3).toMap)
+      gen.unpersist()
+    }
+  }
+
+  test("a store whose bookkeeping rows Spark appended replays and commits beside them") {
+    val root = tmpRoot()
+    val gen = CorpusGen.generate(spark, 300L, 60L).cache()
+    val pages = CorpusGen.pages(gen)
+    val run1 = ResumablePipeline.run(spark, new SnapshotStore(spark, root), pages)
+      .as[(Long, Long)].collect().sorted.toSeq
+    // rewrite the bookkeeping tables as one Spark append each
+    import scala.reflect.io.Directory
+    val written = new SnapshotStore(spark, root)
+    for ((table, rows, schema) <- Seq(
+        ("_snapshots", written.snapshots, SnapshotStore.LogSchema),
+        ("_lineage", written.lineage, SnapshotStore.LineageSchema),
+        ("_metrics", written.metrics, SnapshotStore.MetricsSchema))) {
+      import scala.jdk.CollectionConverters._
+      val kept = rows.get.collect().toSeq
+      new Directory(new java.io.File(s"$root/$table")).deleteRecursively()
+      spark.createDataFrame(kept.asJava, schema).coalesce(1)
+        .write.mode(SaveMode.Append).parquet(s"$root/$table")
+    }
+
+    val store = new SnapshotStore(spark, root)
+    val (replayed, jobs) = countJobs(ResumablePipeline.run(spark, store, pages))
+    assert(jobs <= 1, s"replay launched $jobs jobs")
+    assert(replayed.as[(Long, Long)].collect().sorted.toSeq == run1)
+    new Directory(new java.io.File(s"$root/clusters")).deleteRecursively()
+    val run3 = ResumablePipeline.run(spark, new SnapshotStore(spark, root), pages)
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(run3 == run1)
+    assert(store.metrics.get.filter(col("name") === "n_clusters")
+      .select("snapshot_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+    assert(store.snapshots.get.filter(col("stage") === "clusters").count() == 2L)
   }
 }
