@@ -127,8 +127,11 @@ object Block {
    *
    * AQE skew-join splitting remains on as backstop. Returns (pairs, metrics).
    * Given `facts`, the job that runs the pairs also observes the metrics
-   * row's four counts into it, from one flagged row per block of the
-   * block-size window; the returned metrics frame is the same either way.
+   * row's four counts into it, from the one row per block whose
+   * mention_id is the block's smallest. That equals the metrics frame's
+   * distinct-block counts while mention ids are unique; two mentions
+   * sharing an id (an xxhash64(url, begin) collision, ROADMAP 4(d)) in
+   * one block would count it twice.
    */
   def pairs(keys: DataFrame, mentions: DataFrame, cfg: ErConfig,
       facts: Option[Observation] = None): (DataFrame, DataFrame) = {
@@ -500,19 +503,11 @@ object Evaluate {
 object Linkage {
   /** A stage handed to the runner at its boundary. `frame` is built on
     * first use, so a runner that replays the stage never builds it.
-    * `observed` is the frame built instead so that the job that runs it
-    * also computes the stage facts into the returned [[Observation]]:
-    * the block counts of `pairs` and `n_clusters` of `clusters`; for the
-    * other stages it is `(frame, None)`. A runner that does not read the
-    * facts takes `frame`, whose plan carries no observation. */
+    * `facts`, if the stage has any, is filled by the first job that runs
+    * `frame`: the block counts of `pairs`, `n_clusters` of `clusters`. */
   final class Stage(val name: String, build: => DataFrame,
-      observe: Option[Observation => DataFrame] = None) {
+      val facts: Option[Observation] = None) {
     lazy val frame: DataFrame = build
-    lazy val observed: (DataFrame, Option[Observation]) =
-      observe.fold((frame, Option.empty[Observation])) { f =>
-        val facts = Observation()
-        (f(facts), Some(facts))
-      }
   }
 
   /** A runner's behaviour at a stage boundary: returns the frame that the
@@ -528,21 +523,22 @@ object Linkage {
   /** `vectors` is evaluated only if `edges` is built. */
   final class Suffix(val mentions: DataFrame, vectors: => DataFrame, cfg: ErConfig,
       at: Boundary) {
-    private def blocked(facts: Option[Observation]) =
-      Block.pairs(Block.keys(mentions, cfg), mentions, cfg, facts)
-    private lazy val unobserved = blocked(None)
-    val pairs: DataFrame = at(new Stage("pairs", unobserved._1,
-      Some(facts => blocked(Some(facts))._1)))
-    def blockMetrics: DataFrame = unobserved._2
+    private val pairFacts = Observation()
+    private val clusterFacts = Observation()
+    private lazy val blocked =
+      Block.pairs(Block.keys(mentions, cfg), mentions, cfg, Some(pairFacts))
+    val pairs: DataFrame = at(new Stage("pairs", blocked._1, Some(pairFacts)))
+    def blockMetrics: DataFrame = blocked._2
     lazy val scored: DataFrame = Score(pairs, mentions, vectors, cfg)
     val edges: DataFrame = at(new Stage("edges", Score.edges(scored, cfg)))
-    // a cluster id is its smallest member's id: one row per cluster has
-    // mention_id = cluster_id
-    private lazy val components =
+    // a cluster id is its smallest member's id, so one row per cluster
+    // has mention_id = cluster_id (while mention ids are unique, as
+    // Block.pairs's facts assume)
+    val clusters: DataFrame = at(new Stage("clusters",
       Cluster.connectedComponents(edges, mentions.select("mention_id"), cfg)
-    val clusters: DataFrame = at(new Stage("clusters", components,
-      Some(components.observe(_,
-        count(when(col("mention_id") === col("cluster_id"), 1)).as("n_clusters")))))
+        .observe(clusterFacts,
+          count(when(col("mention_id") === col("cluster_id"), 1)).as("n_clusters")),
+      Some(clusterFacts)))
   }
 
   def apply(pages: DataFrame, cfg: ErConfig)(at: Boundary): Suffix = {

@@ -5,11 +5,8 @@ import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.spark.Success
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, NelShim, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -48,13 +45,14 @@ import scala.jdk.CollectionConverters._
  * read; each snapshot is opened with the schema stored in its parquet
  * footer, which the driver reads itself. A stage commit runs exactly the
  * jobs of its data write. Everything it records comes out of that write:
- * the row count and the stage facts are observed (`Dataset.observe`) by
- * the writing job, and each write task's `recordsWritten` is the lineage
- * row of its partition. The driver then writes the bookkeeping files
- * itself, `_lineage`, `_metrics`, and `_snapshots` last, so a stage is
- * durable, and replayed, only once its log row is in place. A commit that
- * failed before that row is redone under the same id, and its files
- * replace the failed attempt's instead of adding to them.
+ * the stage facts are observed (`Dataset.observe`) by the writing job,
+ * and the row count of each written part file, read from its footer on
+ * the driver, is the lineage row of the write task's partition. The
+ * driver then writes the bookkeeping files itself, `_lineage`,
+ * `_metrics`, and `_snapshots` last, so a stage is durable, and
+ * replayed, only once its log row is in place. A commit that failed
+ * before that row is redone under the same id, and its files replace the
+ * failed attempt's instead of adding to them.
  */
 class SnapshotStore(spark: SparkSession, root: String) {
   import SnapshotStore._
@@ -74,23 +72,38 @@ class SnapshotStore(spark: SparkSession, root: String) {
       catch { case _: Exception => None }
     else None
 
+  /** The part files of a written snapshot directory. */
+  private def partFiles(path: String): Iterator[Path] = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).iterator
+      .map(_.getPath).filter(_.getName.startsWith("part-"))
+  }
+
+  private def footer[T](file: Path)(read: ParquetFileReader => T): T = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try read(reader) finally reader.close()
+  }
+
   /** The schema Spark stored in the footer of a snapshot's first part
     * file, read on the driver: `spark.read.parquet` without a schema runs
     * one inference job per read. None (so Spark infers) when the footer
     * carries no Spark schema. */
-  private def footerSchema(path: String): Option[StructType] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    p.getFileSystem(conf).listStatus(p).iterator.map(_.getPath)
-      .find(_.getName.startsWith("part-"))
-      .flatMap { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        try Option(reader.getFileMetaData.getKeyValueMetaData
-          .get(ParquetReadSupport.SPARK_METADATA_KEY))
-        finally reader.close()
-      }
+  private def footerSchema(path: String): Option[StructType] =
+    partFiles(path).nextOption()
+      .flatMap(footer(_)(r => Option(r.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))))
       .map(DataType.fromJson(_).asInstanceOf[StructType])
-  }
+
+  /** Rows written by each write task of a snapshot, by partition id in
+    * order, from the part files' footers: `part-<partition>-…`. Tasks
+    * that wrote nothing have no row. */
+  private def rowsByPartition(path: String): Seq[(Int, Long)] =
+    partFiles(path).toSeq
+      .map(f => (f.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt,
+        footer(f)(_.getRecordCount)))
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      .filter(_._2 > 0).sortBy(_._1)
 
   /** A committed stage snapshot, read with its footer schema. */
   private def readSnapshot(path: String): Option[DataFrame] = readOpt(path, footerSchema(path))
@@ -125,59 +138,37 @@ class SnapshotStore(spark: SparkSession, root: String) {
       facts: Option[Observation] = None): (Long, DataFrame) = {
     val id = entries.filter(_.stage == stage).map(_.snapshot_id).maxOption.getOrElse(0L) + 1L
     val out = dir(stage, s"snapshot=$id")
-    val counted = Observation()
-    val (wallMs, perPartition) = recordsWritten {
-      val t0 = System.nanoTime()
-      df.observe(counted, count(lit(1)).as("row_count"))
-        .write.mode(SaveMode.Overwrite).parquet(out)
-      (System.nanoTime() - t0) / 1000000L
-    }
+    val t0 = System.nanoTime()
+    df.write.mode(SaveMode.Overwrite).parquet(out)
+    val wallMs = (System.nanoTime() - t0) / 1000000L
     val back = readSnapshot(out)
       .getOrElse(throw new IllegalStateException(s"committed snapshot $out is unreadable"))
+    val perPartition = rowsByPartition(out)
 
     val file = s"$stage-$id.parquet"
     writeRows("_lineage", file, LineageSchema,
       perPartition.map { case (p, n) => Row(stage, id, p, -1L, n, wallMs) })
-    facts.map(_.get).foreach { values =>
+    facts.map(observed(stage, _)).foreach { values =>
       writeRows("_metrics", file, MetricsSchema, values.toSeq.map { case (name, v) =>
         Row(stage, id, name, Option(v).fold(0.0)(_.asInstanceOf[Number].doubleValue))
       })
     }
     writeRows("_snapshots", file, LogSchema, Seq(Row(id, stage, inputSnapshot,
-      counted.get("row_count"), wallMs, conf, new java.sql.Timestamp(System.currentTimeMillis()))))
+      perPartition.map(_._2).sum, wallMs, conf, new java.sql.Timestamp(System.currentTimeMillis()))))
     log = Some(entries :+ LogEntry(stage, conf, inputSnapshot, id))
     (id, back)
   }
 
-  /** Runs `write` and returns its result with the records each of its
-    * write tasks wrote, by partition id, in partition order. Its jobs are
-    * told apart from other threads' by a local property of this thread,
-    * so the caller's job group and description stay as they are. */
-  private def recordsWritten[T](write: => T): (T, Seq[(Int, Long)]) = {
-    val sc = spark.sparkContext
-    val scope = java.util.UUID.randomUUID.toString
-    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val written = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && scope == j.properties.getProperty(CommitScope))
-          j.stageIds.foreach(stages.add)
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.reason == Success && t.taskMetrics != null && stages.contains(t.stageId)) {
-          val n = t.taskMetrics.outputMetrics.recordsWritten
-          if (n > 0) written.put(t.taskInfo.partitionId, n): Unit
-        }
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(CommitScope, scope)
-    try {
-      val out = write
-      NelShim.waitForListenerBus(spark)
-      (out, written.asScala.toSeq.sortBy(_._1))
-    } finally {
-      sc.setLocalProperty(CommitScope, null)
-      sc.removeSparkListener(listener)
-    }
+  /** The values of an observation made by a write that has returned. A
+    * query listener fills it from the listener bus; once the bus is
+    * drained, an observation still empty never will be filled (AQE
+    * removed every plan node that carried it), so this fails instead of
+    * waiting on it. */
+  private def observed(stage: String, facts: Observation): Map[String, Any] = {
+    NelShim.waitForListenerBus(spark)
+    if (!facts.future.isCompleted)
+      throw new IllegalStateException(s"the write of stage $stage did not observe its facts")
+    facts.get
   }
 
   /** Writes `rows` as the one parquet file `table/name`, from the driver:
@@ -209,23 +200,17 @@ class SnapshotStore(spark: SparkSession, root: String) {
     if (!fs.rename(hidden, target)) throw new java.io.IOException(s"cannot rename $hidden to $target")
   }
 
-  /** Replay-or-compute: the resumability primitive. `compute` gives the
-    * stage frame and, if it has them, its facts (see [[commit]]). */
-  def runStage(stage: String, conf: String, inputSnapshot: Long = -1L)
-      (compute: => (DataFrame, Option[Observation])): (Long, DataFrame) =
-    latest(stage, conf, inputSnapshot).getOrElse {
-      val (df, facts) = compute
-      commit(stage, df, conf, inputSnapshot, facts)
-    }
+  /** Replay-or-compute: the resumability primitive. `facts` are those
+    * of the frame `compute` builds (see [[commit]]). */
+  def runStage(stage: String, conf: String, inputSnapshot: Long = -1L,
+      facts: Option[Observation] = None)(compute: => DataFrame): (Long, DataFrame) =
+    latest(stage, conf, inputSnapshot).getOrElse(commit(stage, compute, conf, inputSnapshot, facts))
 
   def metrics: Option[DataFrame] = readOpt(dir("_metrics"), Some(MetricsSchema))
   def lineage: Option[DataFrame] = readOpt(dir("_lineage"), Some(LineageSchema))
 }
 
 object SnapshotStore {
-
-  /** The local property that marks the jobs of one commit's data write. */
-  private val CommitScope = "nelspark.store.commit"
 
   /** Spark's own mapping of the bookkeeping schemas to parquet, with
     * timestamps as INT64 microseconds, a type the driver can write. */
@@ -284,7 +269,7 @@ object ResumablePipeline {
     store.refresh()
     var input = -1L
     Linkage(pages, cfg) { stage =>
-      val (id, df) = store.runStage(stage.name, ch, input)(stage.observed)
+      val (id, df) = store.runStage(stage.name, ch, input, stage.facts)(stage.frame)
       input = id
       df
     }.clusters

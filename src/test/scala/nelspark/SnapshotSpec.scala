@@ -241,6 +241,30 @@ class SnapshotSpec extends SparkSpec {
     }
   }
 
+  test("a commit finishes with its facts when no page is English and when every block is purged") {
+    val gen = CorpusGen.generate(spark, 300L, 60L).cache()
+    for ((pages, cfg) <- Seq(
+        (CorpusGen.pages(gen).withColumn("lang", lit("de")), ErConfig()),
+        (CorpusGen.pages(gen), ErConfig(cliqueMax = 0, chainMax = 0)))) {
+      val store = new SnapshotStore(spark, tmpRoot())
+      val clusters = ResumablePipeline.run(spark, store, pages, cfg)
+      val facts = store.metrics.get.select("stage", "name", "value")
+        .as[(String, String, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
+      val rows = store.snapshots.get.select("stage", "row_count").as[(String, Long)].collect().toMap
+      assert(rows("pairs") == 0L && rows("edges") == 0L)
+      assert(facts(("pairs", "n_chained")) == 0.0)
+      assert(facts(("pairs", "n_purged")) == facts(("pairs", "n_blocks")))
+      assert(facts(("clusters", "n_clusters")) == rows("mentions").toDouble)
+      assert(clusters.count() == rows("mentions"))
+      if (rows("mentions") == 0L)
+        assert(facts.values.forall(_ == 0.0) &&
+          store.lineage.get.filter(col("stage") =!= "extract").isEmpty)
+      else
+        assert(facts(("pairs", "n_blocks")) > 0.0 && facts(("pairs", "max_block")) > 0.0)
+    }
+    gen.unpersist()
+  }
+
   test("a store whose bookkeeping rows Spark appended replays and commits beside them") {
     val root = tmpRoot()
     val gen = CorpusGen.generate(spark, 300L, 60L).cache()
