@@ -23,6 +23,13 @@ reads "within noise", or "worse than bound" when the change's median is
 worse than the base's by more than the bound. The last line is one JSON
 object with every run.
 
+With --trace-diff it also makes one `--trace 1` run per side and prints,
+for each traced stage, the base and change values of the counters that do
+not depend on host noise: `jobs`, `shuffle_write_mb`, `max_task_records`
+and `rows_out`. --pairs may then be 0, for the trace diff alone:
+
+    python3 scripts/ab.py HEAD~1 --workload er-hot --seed 3 --pairs 0 --trace-diff
+
 Exits 1 if any run fails a check, reports `correct: false` or does not
 finish; nothing under nelbench/ is edited.
 """
@@ -68,10 +75,14 @@ def build(side):
     subprocess.run([sys.executable, "-B", "-c", code], cwd=side, check=True)
 
 
-def run_once(side, workload, seed, seconds):
+# traced counters that repeat exactly from run to run (no timings)
+TRACE_COUNTERS = ("jobs", "shuffle_write_mb", "max_task_records", "rows_out")
+
+
+def run_once(side, workload, seed, seconds, trace=False):
     proc = subprocess.run(
         [sys.executable, "nelbench/run.py", "--workload", workload, "--seed", str(seed),
-         "--seconds", str(seconds), "--trace", "0"],
+         "--seconds", str(seconds), "--trace", "1" if trace else "0"],
         cwd=side, capture_output=True, text=True)
     lines = [l for l in proc.stdout.splitlines() if l.strip()]
     if proc.returncode != 0 or len(lines) < 2:
@@ -111,17 +122,37 @@ def verdict(base, change, better, bound, unit):
     return wins, word
 
 
+def trace_diff(base, change):
+    """{stage: {counter: [base, change]}} over the traced stages' counters."""
+    diff = {}
+    for side, metrics in enumerate((base, change)):
+        for name, value in metrics.items():
+            stage, _, counter = name.rpartition(".")
+            if counter in TRACE_COUNTERS:
+                diff.setdefault(stage, {}).setdefault(counter, [None, None])[side] = value
+    return diff
+
+
+def fmt(v):
+    return "-" if v is None else f"{v:.4g}"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("base", help="git revision of the base side")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--pairs", type=int, required=True,
+                    help="timed pairs; 0 runs only the --trace-diff runs")
+    ap.add_argument("--trace-diff", action="store_true",
+                    help="also diff the counters of one traced run per side")
     ap.add_argument("--seconds", type=float, default=4.0)
     ap.add_argument("--workdir", type=Path,
                     default=Path(tempfile.gettempdir()) / "nelspark-ab",
                     help="where the base is exported (outside the checkout)")
     args = ap.parse_args()
+    if args.pairs < 1 and not args.trace_diff:
+        raise SystemExit("--pairs 0 needs --trace-diff")
     workdir = args.workdir.resolve()
     if workdir == REPO or REPO in workdir.parents:
         raise SystemExit("--workdir must be outside the checkout")
@@ -150,8 +181,30 @@ def main():
         if failed:
             break
 
+    traced = {}
+    if args.trace_diff and not failed:
+        for name in ("base", "change"):
+            try:
+                r = run_once(sides[name], args.workload, args.seed, args.seconds, trace=True)
+            except RuntimeError as e:
+                r = {"metrics": {}, "correct": False, "failures": [str(e)]}
+            traced[name] = r
+            log(f"traced {name}: correct={r['correct']}")
+            if not r["correct"]:
+                failed.append((name, "trace", r["failures"]))
+
+    diff = {}
+    if traced and not failed:
+        diff = trace_diff(traced["base"]["metrics"], traced["change"]["metrics"])
+        print(f"{args.workload} seed {args.seed}, one traced run per side, base {sha[:12]} vs "
+              f"working tree; base -> change")
+        print(f"  {'stage':28s}" + "".join(f"{c:>24s}" for c in TRACE_COUNTERS))
+        for stage, counters in diff.items():
+            cells = (counters.get(c, [None, None]) for c in TRACE_COUNTERS)
+            print(f"  {stage:28s}" +
+                  "".join(f"{fmt(b) + ' -> ' + fmt(c):>24s}" for b, c in cells))
     summary = {}
-    if not failed:
+    if args.pairs and not failed:
         print(f"{args.workload} seed {args.seed}, {args.pairs} pairs, base {sha[:12]} vs "
               f"working tree; median [q1, q3]")
         for m in spec["end_to_end"]:
@@ -168,10 +221,10 @@ def main():
             summary[name] = {"base": b, "change": c, "wins": wins, "verdict": word}
     print(json.dumps({"workload": args.workload, "seed": args.seed, "pairs": args.pairs,
                       "seconds": args.seconds, "base": sha, "metrics": summary,
-                      "runs": runs, "failed": failed}))
+                      "runs": runs, "trace_diff": diff, "failed": failed}))
     if failed:
         for name, pair, failures in failed:
-            log(f"FAILED: {name} run of pair {pair}: {failures}")
+            log(f"FAILED: {name} run {pair}: {failures}")
         sys.exit(1)
 
 

@@ -73,6 +73,41 @@ object ExprHelpers {
       norms: Array[Double], nprobe: Int): ArrayData =
     new GenericArrayData(Kernels.nearestCells(vec.toFloatArray(), cent, norms, nprobe))
 
+  /** Each distinct non-empty, non-null token with its count, in order of
+    * first occurrence: one hash count, O(n) in the tokens. */
+  def termCounts(tokens: ArrayData): ArrayData = {
+    val n = tokens.numElements()
+    val slot = new java.util.HashMap[UTF8String, Integer](math.max(16, n * 2))
+    val terms = new Array[UTF8String](n)
+    val counts = new Array[Int](n)
+    var distinct = 0
+    var i = 0
+    while (i < n) {
+      if (!tokens.isNullAt(i)) {
+        val t = tokens.getUTF8String(i)
+        if (t.numBytes() > 0) {
+          val j = slot.get(t)
+          if (j == null) {
+            // the token may point into the input row's buffer
+            val own = t.clone()
+            slot.put(own, distinct)
+            terms(distinct) = own
+            counts(distinct) = 1
+            distinct += 1
+          } else counts(j) += 1
+        }
+      }
+      i += 1
+    }
+    val rows = new Array[Any](distinct)
+    i = 0
+    while (i < distinct) {
+      rows(i) = org.apache.spark.sql.catalyst.InternalRow(terms(i), counts(i).toDouble)
+      i += 1
+    }
+    new GenericArrayData(rows)
+  }
+
   /** Merge-scan dot over parallel primitive arrays (h-sorted). */
   def sparseDotArrays(ha: ArrayData, wa: ArrayData,
       hb: ArrayData, wb: ArrayData): Double = {
@@ -248,6 +283,25 @@ case class ExtractMentions(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"nelspark.expr.ExprHelpers.mentions($c)")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "extract_mentions"
+}
+
+/** Term frequencies of one document's tokens (TF-IDF, A3):
+  * array<struct<term, tf: double>>, one element per distinct non-empty
+  * token. Counting inside the row replaces an explode + (doc, term)
+  * shuffle of every token. */
+case class TermCounts(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(
+    StructType(Seq(
+      StructField("term", StringType, nullable = false),
+      StructField("tf", DoubleType, nullable = false))),
+    containsNull = false)
+  override def nullIntolerant: Boolean = true
+  override def nullSafeEval(v: Any): Any =
+    ExprHelpers.termCounts(v.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"nelspark.expr.ExprHelpers.termCounts($c)")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+  override def prettyName: String = "term_counts"
 }
 
 /**

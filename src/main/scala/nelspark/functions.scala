@@ -70,6 +70,10 @@ object functions {
   def sparse_dot_arrays(ha: Column, wa: Column, hb: Column, wb: Column): Column =
     c(SparseDotArrays(e(ha), e(wa), e(hb), e(wb)))
 
+  /** Term frequencies of an array<string> of tokens:
+    * array<struct<term, tf: double>> over its distinct non-empty tokens. */
+  def term_counts(tokens: Column): Column = c(TermCounts(e(tokens)))
+
   /** Register all custom expressions as SQL functions on this session. */
   def registerAll(spark: SparkSession): Unit = {
     NelShim.registerFunction(spark, "jaro_winkler", xs => JaroWinkler(xs(0), xs(1)))

@@ -3,6 +3,7 @@ package nelspark.pipeline
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import nelspark.functions._
 
 /**
@@ -35,6 +36,8 @@ case class ErConfig(
     wLev: Double = 0.15,
     wCtx: Double = 0.40,
     tau: Double = 0.72,
+    /** Rounds the distributed connected-components fixpoint may take;
+      * it throws if the edges are not a star forest by then. */
     maxIter: Int = 25,
     /** Edge count at or below which connected components runs as a
       * driver-local union-find (one job) instead of the distributed
@@ -77,77 +80,85 @@ object Mentions {
 /** B1+B2: multi-pass blocking. Pass 1 = exact normalized-name key;
   * pass 2 = char-n-gram MinHash LSH band keys. */
 object Block {
-  /** (mention_id, name_norm, url, block_key, pass) — both passes unioned.
-    * Mention attributes ride along so pair generation emits fully-attributed
-    * pairs and the scorer needs NO join back to the mention table (two
-    * fewer 10^?-row shuffles at any scale; no broadcast assumption). */
+  /** (mention_id, name_norm, url, block_key, ctx_sig) — both passes
+    * unioned. The pass is the `block_key` prefix: `n:` for the name pass,
+    * `l:` for LSH. Mention attributes ride along so pair generation emits
+    * fully-attributed pairs and the scorer needs NO join back to the
+    * mention table (two fewer 10^?-row shuffles at any scale; no broadcast
+    * assumption). `ctx_sig` rides on the name-pass row only (null on LSH
+    * rows): only name blocks are ever chained, and the chain tier
+    * sub-blocks by it without a join back to the mentions. */
   def keys(mentions: DataFrame, cfg: ErConfig): DataFrame = {
     // Single pass, not name-branch ∪ lsh-branch: the union form scanned
     // the mention table twice (two map stages, two reads of the cache /
     // two passes over 10^12 rows at corpus scale) to emit per row one
     // name key + `bands` LSH keys. One explode over the concatenated
-    // key array emits the IDENTICAL rows in one scan. Key strings and
-    // the pass column are byte-identical to the old branches (transform
-    // index ≡ posexplode pos).
+    // key array emits the IDENTICAL rows in one scan.
+    val noSig = lit(null).cast(mentions.schema("ctx_sig").dataType)
     mentions.select(col("mention_id"), col("name_norm"), col("url"),
       explode(concat(
         array(struct(concat(lit("n:"), col("name_norm")).as("block_key"),
-          lit("name").as("pass"))),
+          col("ctx_sig"))),
         transform(
           minhash_bands(
             minhash_ngrams(col("name_norm"), cfg.ngramN, cfg.minhashK, cfg.seed),
             cfg.bands),
           (bh, band) => struct(
             concat(lit("l:"), band, lit(":"), bh).as("block_key"),
-            lit("lsh").as("pass"))))).as("k"))
+            noSig.as("ctx_sig"))))).as("k"))
       .select(col("mention_id"), col("name_norm"), col("url"),
-        col("k.block_key").as("block_key"), col("k.pass").as("pass"))
+        col("k.block_key").as("block_key"), col("k.ctx_sig").as("ctx_sig"))
   }
 
   /**
-   * Candidate pairs (a_id < b_id), deduped across passes (SET2). Skew
+   * Candidate pairs (a_id < b_id), deduped across passes (SET2), from one
+   * windowed pass over the keys: a window on `block_key` sizes each block
+   * and every kept row then emits its own pairs, so no join runs, across
+   * the block table or back to the mentions (SparkER, EDBT 2019). Skew
    * handling is explicit and three-tiered (SURVEY.md §7.6.1):
    *
-   *  - sz ≤ cliqueMax          → full clique via self equi-join (quadratic
-   *                              but bounded: ≤ cliqueMax² pairs per key);
-   *  - cliqueMax < sz ≤ chainMax → chain pairs inside context-LSH
-   *                              sub-blocks (block_key, ctx-minhash
-   *                              component), from ONE window ordered by
-   *                              id: each mention pairs with its next
-   *                              `chainWindow` neighbors (window pairs),
-   *                              and every later mention with the first
-   *                              `chainWindow` (anchor pairs).
+   *  - sz ≤ cliqueMax          → full clique: each row carries its block's
+   *                              members (a collect_list over the same
+   *                              window, ≤ cliqueMax long) and pairs with
+   *                              those of larger id;
+   *  - cliqueMax < sz ≤ chainMax → name blocks only: chain pairs inside
+   *                              context-LSH sub-blocks (block_key,
+   *                              ctx-minhash component), from ONE window
+   *                              ordered by id: each mention pairs with
+   *                              its next `chainWindow` neighbors (window
+   *                              pairs), and every later mention with the
+   *                              first `chainWindow` (anchor pairs).
    *                              Linear in block size; connected components
    *                              recovers the full cluster from the chain.
    *                              This is what keeps Zipfian head names
    *                              (hot entities) recallable WITHOUT an O(n²)
    *                              blow-up at 10^12 rows;
-   *  - sz > chainMax           → purged (degenerate stop-name block; the
-   *                              SparkER block-purging bound, EDBT 2019).
+   *  - sz > chainMax, or an LSH block past cliqueMax → purged (degenerate
+   *                              stop-name block; the SparkER
+   *                              block-purging bound, EDBT 2019).
    *
-   * AQE skew-join splitting remains on as backstop. Returns (pairs, metrics).
-   * Given `facts`, the job that runs the pairs also observes the metrics
-   * row's four counts into it, from the one row per block whose
-   * mention_id is the block's smallest. That equals the metrics frame's
-   * distinct-block counts while mention ids are unique; two mentions
-   * sharing an id (an xxhash64(url, begin) collision, ROADMAP 4(d)) in
-   * one block would count it twice.
+   * Returns (pairs, metrics). Given `facts`, the job that runs the pairs
+   * also observes the metrics row's four counts into it, from the one row
+   * per block whose mention_id is the block's smallest. That equals the
+   * metrics frame's distinct-block counts while mention ids are unique;
+   * two mentions sharing an id (an xxhash64(url, begin) collision,
+   * ROADMAP 4(d)) in one block would count it twice.
+   *
+   * @param mentions unused: the keys carry every mention attribute the
+   *                 pairs need. Kept for source compatibility.
    */
   def pairs(keys: DataFrame, mentions: DataFrame, cfg: ErConfig,
       facts: Option[Observation] = None): (DataFrame, DataFrame) = {
     // Block size via an unordered window count, NOT groupBy+join-back:
-    // the agg+join form shuffled the keys subtree twice (once into the
-    // agg, once into the join) and computed the key-generation kernels
-    // (minhash bands posexplode) twice. One window = ONE exchange on
-    // block_key, keys computed once — and the window's hash partitioning
-    // + block_key sort are exactly what the tier-1 self-join below needs,
-    // so it runs exchange-free (guide §2.4: share one exchange between
-    // operations keyed the same way).
+    // one exchange on block_key, and its hash partitioning + block_key
+    // sort also serve the member list and the sub-block chain window
+    // below (guide §2.4: share one exchange between operations keyed the
+    // same way).
     val block = Window.partitionBy("block_key")
     val sized = keys.withColumn("sz", count(lit(1)).over(block))
-    val chained = col("pass") === "name" &&
-      col("sz") > cfg.cliqueMax && col("sz") <= cfg.chainMax
-    val purged = col("sz") > cfg.chainMax || (col("pass") === "lsh" && col("sz") > cfg.cliqueMax)
+    val named = col("block_key").startsWith("n:")
+    val chained = named && col("sz") > cfg.cliqueMax && col("sz") <= cfg.chainMax
+    val purged = col("sz") > cfg.chainMax || (!named && col("sz") > cfg.cliqueMax)
     // the block's smallest member flags its one row; the min shares the
     // sz window, so observing adds no exchange
     val k2 = facts.fold(sized) { o =>
@@ -159,55 +170,47 @@ object Block {
         max("sz").as("max_block"))
     }
 
-    // tier 1: bounded cliques
-    val small = k2.filter(col("sz") <= cfg.cliqueMax)
-    val a = small.select(col("block_key"), col("mention_id").as("a_id"),
-      col("name_norm").as("a_norm"), col("url").as("a_url"))
-    val b = small.select(col("block_key"), col("mention_id").as("b_id"),
-      col("name_norm").as("b_norm"), col("url").as("b_url"))
-    val clique = a.join(b, Seq("block_key"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id", "a_norm", "b_norm", "a_url", "b_url")
-
+    val m = struct(col("mention_id").as("id"), col("name_norm").as("norm"), col("url"))
+    def pair(a: Column, b: Column): Column = struct(a.as("a"), b.as("b"))
+    // tier 1: a clique row pairs with its block's members of larger id
+    val clique = transform(filter(col("members"), x => x("id") > col("mention_id")),
+      x => pair(m, x))
     // tier 2: chained mega-blocks, sub-blocked by context minhash component.
     // Name-pass only: a mega LSH block's members are (a) hot exact names —
     // already chained via their mega name block — or (b) stop-name n-gram
     // collisions (noise); generating chains for them re-shuffles the same
     // membership ~bands× times for zero recall. LSH keeps catching typo
     // variants through its SMALL blocks (tier 1), which is its entire job.
-    val mega = k2
-      .filter(chained)
-      .select("block_key", "mention_id", "name_norm", "url")
-      .join(mentions.select("mention_id", "ctx_sig"), Seq("mention_id"))
-      .select(col("block_key"), col("mention_id"), col("name_norm"), col("url"),
-        posexplode(col("ctx_sig")).as(Seq("bi", "bv")))
     // One window per sub-block, ordered by id: each row pairs with its
     // next `chainWindow` rows (local robustness), and every row past
     // W+1 also pairs with the first W rows (anchor/hub pairs: component
     // diameter ≈ 2, so connected components converges in O(1) rounds
     // instead of O(log blockSize)). Rows 2..W+1 already reach the first
     // W rows through the window pairs. Ordered by mention_id ⇒ a_id < b_id.
+    // The block_key partitioning satisfies this window: no exchange.
     val w = Window.partitionBy("block_key", "bi", "bv").orderBy("mention_id")
     val fromStart = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val m = struct(col("mention_id").as("id"), col("name_norm").as("norm"), col("url"))
-    def pair(a: Column, b: Column): Column = struct(a.as("a"), b.as("b"))
     val ks = 1 to cfg.chainWindow
     val pastWindow = row_number().over(w) > cfg.chainWindow + 1
-    val chains = mega
-      .select(array(
-        ks.map(k => pair(m, lead(m, k).over(w))) ++
-          ks.map(k => when(pastWindow, pair(nth_value(m, k).over(fromStart), m))): _*)
-        .as("ps"))
+    val chain = array(
+      ks.map(k => pair(m, lead(m, k).over(w))) ++
+        ks.map(k => when(pastWindow, pair(nth_value(m, k).over(fromStart), m))): _*)
+
+    // a clique row has no sub-block (bi null); a chained row has no members
+    val p = k2
+      .filter(!purged)
+      .withColumn("members", collect_list(when(col("sz") <= cfg.cliqueMax, m)).over(block))
+      .select(col("block_key"), col("mention_id"), col("name_norm"), col("url"),
+        col("members"), posexplode_outer(when(chained, col("ctx_sig"))).as(Seq("bi", "bv")))
+      .select(when(col("bi").isNull, clique).otherwise(chain).as("ps"))
       .select(explode(col("ps")).as("p"))
       .filter(col("p.b").isNotNull)
       .select(col("p.a.id").as("a_id"), col("p.b.id").as("b_id"),
         col("p.a.norm").as("a_norm"), col("p.b.norm").as("b_norm"),
         col("p.a.url").as("a_url"), col("p.b.url").as("b_url"))
-
-    val p = clique.unionByName(chains)
       .dropDuplicates("a_id", "b_id") // dedupe BEFORE scoring (SET2 barrier)
 
-    val metrics = sized.select("block_key", "pass", "sz").distinct()
+    val metrics = sized.select("block_key", "sz").distinct()
       .agg(
         count("*").as("n_blocks"),
         sum(when(chained, 1L).otherwise(0L)).as("n_chained"),
@@ -229,10 +232,12 @@ object Tfidf {
     * have thousands of distinct terms at 10^12 scale; pruning bounds both
     * vector length and pair-scoring payload). */
   def pageVectors(extracted: DataFrame, topK: Int = 32): DataFrame = {
+    // tf is a per-row value: each page is one row (one row per url, as
+    // mention_id assumes), so the counts come from a hash count inside the
+    // row instead of a (url, term) shuffle of every token
     val terms = extracted
-      .select(col("url"), explode(split(lower(col("text")), "\\s+")).as("term"))
-      .filter(length(col("term")) > 0)
-      .groupBy("url", "term").agg(count("*").cast("double").as("tf"))
+      .select(col("url"), explode(term_counts(split(lower(col("text")), "\\s+"))).as("t"))
+      .select(col("url"), col("t.term").as("term"), col("t.tf").as("tf"))
     // N arrives via a broadcast 1-row cross join (same form as q_tfidf) —
     // an eager .head() here forced a full corpus scan at DAG-CONSTRUCTION
     // time, before the caller even acts on the plan (round-2 advice)
@@ -241,7 +246,7 @@ object Tfidf {
     // df falls out of tf as a window count — each (url, term) row IS one
     // distinct doc (the q_tfidf form): one exchange on term replaces the
     // groupBy(term) agg + join-back pair, and the tf subtree (tokenize +
-    // explode + first agg) is computed once instead of twice.
+    // count) is computed once instead of twice.
     val weighted = terms
       .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
       .crossJoin(broadcast(nDf))
@@ -322,21 +327,25 @@ object Score {
  */
 object Cluster {
 
+  /** Emits (v, mn) for each neighbour v > u of each node u, where mn is
+    * the minimum of u's neighbourhood. Every output edge has a_id > b_id
+    * (b_id = least(mn, u) ≤ u < v = a_id), and the output is
+    * hash-partitioned on a_id: that serves this dedupe and the next
+    * small-star's window, which then needs no exchange of its own. */
   private def largeStar(e: DataFrame): DataFrame =
     e.select(col("a_id").as("u"), col("b_id").as("v"))
       .unionAll(e.select(col("b_id").as("u"), col("a_id").as("v")))
       .withColumn("mn", min("v").over(Window.partitionBy("u")))
       .filter(col("v") > col("u"))
       .select(col("v").as("a_id"), least(col("mn"), col("u")).as("b_id"))
-      .filter(col("a_id") =!= col("b_id"))
+      .repartition(col("a_id"))
       .dropDuplicates("a_id", "b_id")
 
-  /** Emits (v, mn) for each edge and (u, mn) for each node u; the
-    * self-edge (mn, mn) is filtered out. */
+  /** Reads large-star's edges (a_id > b_id) as u = a_id, v = b_id. Emits
+    * (v, mn) for each edge and (u, mn) for each node u; the self-edge
+    * (mn, mn) is filtered out, so a_id > b_id on the output too. */
   private def smallStar(e: DataFrame): DataFrame =
-    e.select(
-        greatest(col("a_id"), col("b_id")).as("u"),
-        least(col("a_id"), col("b_id")).as("v"))
+    e.select(col("a_id").as("u"), col("b_id").as("v"))
       .withColumn("mn", min("v").over(Window.partitionBy("u")))
       .select(explode(array(
         struct(col("v").as("a_id"), col("mn").as("b_id")),
@@ -346,18 +355,25 @@ object Cluster {
       .dropDuplicates("a_id", "b_id")
 
   /** The alternating large/small-star fixpoint is exactly a star forest:
-    * every child has ONE parent (count == distinct a_id) and no parent is
-    * itself a child (b_id ∩ a_id = ∅). Both steps preserve component
-    * connectivity and leave star forests unchanged (Kiveris et al., SoCC
-    * 2014), so testing the structural property converges one full
-    * iteration EARLIER than edge-set-equality-with-previous — it skips
-    * the redundant confirm round (~6 shuffles) entirely. Two tiny jobs
-    * over localCheckpoint'ed edges. */
+    * every child (a_id) has ONE parent and no parent is itself a child.
+    * Both steps preserve component connectivity and leave star forests
+    * unchanged (Kiveris et al., SoCC 2014), so testing the structural
+    * property converges one full iteration EARLIER than
+    * edge-set-equality-with-previous — it skips the redundant confirm
+    * round (~6 shuffles) entirely. One aggregate over the
+    * localCheckpoint'ed edges: per node, its parent count and whether it
+    * is a parent; the offending nodes are counted in the same job. */
   private def isStarForest(e: DataFrame): Boolean = {
-    val r = e.agg(count(lit(1)), countDistinct(col("a_id"))).head()
-    r.getLong(0) == r.getLong(1) &&
-      e.select("b_id").join(e.select(col("a_id").as("b_id")), Seq("b_id"), "left_semi")
-        .isEmpty
+    val bad = Observation()
+    e.select(explode(array(
+        struct(col("a_id").as("node"), lit(1).as("parents"), lit(false).as("parent")),
+        struct(col("b_id").as("node"), lit(0).as("parents"), lit(true).as("parent")))).as("x"))
+      .groupBy(col("x.node"))
+      .agg(sum(col("x.parents")).as("parents"), max(col("x.parent")).as("parent"))
+      .observe(bad, count(when(col("parents") > 1 || (col("parents") === 1 && col("parent")), 1))
+        .as("n"))
+      .write.format("noop").mode("overwrite").save()
+    bad.get("n").asInstanceOf[Long] == 0L
   }
 
   /** Driver-local union-find over a collected edge array; cluster id =
@@ -395,9 +411,12 @@ object Cluster {
    */
   def connectedComponents(edges: DataFrame, allIds: DataFrame,
       cfg: ErConfig): DataFrame = {
-    var e = edges.select("a_id", "b_id").localCheckpoint(true)
+    // the edge count is observed in the checkpoint's own job
+    val counted = Observation()
+    var e = edges.select("a_id", "b_id").observe(counted, count(lit(1)).as("n"))
+      .localCheckpoint(true)
     val sess = e.sparkSession
-    val n0 = e.count()
+    val n0 = counted.get("n").asInstanceOf[Long]
 
     val assign: DataFrame =
       if (n0 <= cfg.ccLocalMax) {
@@ -433,9 +452,11 @@ object Cluster {
           prevParts.foreach(p => sess.conf.set("spark.sql.shuffle.partitions", p))
         }
         System.err.println(s"[cc] distributed fixpoint: iters=$it edges0=$n0 loopParts=$loopParts")
+        if (!converged) throw new IllegalStateException(
+          s"connected components did not converge in maxIter = ${cfg.maxIter} rounds")
+        // a star forest: each child has exactly one parent, its cluster
+        // id, and no root is a child (roots fall to the coalesce below)
         e.select(col("a_id").as("mention_id"), col("b_id").as("cluster_id"))
-          .unionAll(e.select(col("b_id").as("mention_id"), col("b_id").as("cluster_id")))
-          .groupBy("mention_id").agg(min("cluster_id").as("cluster_id"))
       }
 
     val idCol = allIds.columns.head
@@ -559,14 +580,15 @@ object Pipeline {
       stage.name match {
         case "mentions" =>
           // Eager cache fill, ONE job, before the fan-out: downstream the
-          // DAG has ~8 independent AQE leaf stages (clique sides, mega
-          // tier, tfidf, eval join) that are submitted concurrently —
+          // DAG has independent AQE leaf stages (block pairs, tfidf, eval
+          // join) that are submitted concurrently —
           // against a COLD cache every one of them recomputes
           // generation+extraction end to end (measured: 8 × ~15 task-s of
           // duplicated work at 2k pages, >75% of the flagship's total
           // CPU). One count() materializes mentions (and, transitively,
-          // any cached upstream corpus) exactly once.
-          val mentions = stage.frame.cache()
+          // any cached upstream corpus) exactly once. The level is
+          // stated: memory, spilling to disk, as cache() would pick.
+          val mentions = stage.frame.persist(StorageLevel.MEMORY_AND_DISK)
           mentions.count(): Unit
           mentions
         case "clusters" => stage.frame.cache()

@@ -2,6 +2,7 @@ package nelspark
 
 import nelspark.expr.Kernels
 import nelspark.functions._
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop}
 
@@ -158,6 +159,18 @@ class ExprSpec extends SparkSpec {
     assert(a == b)
     assert(!a.contains("[F@") && a.contains("2x3:") && a.endsWith(", 2)"), a)
     assert(cells(Array(Array(1f, 0f, 0f), Array(0f, 0f, 1f))) != a)
+  }
+
+  test("term_counts: one element per distinct non-empty token, counted") {
+    import spark.implicits._
+    val rows = Seq(" b a  b B", "école über école 東京 東京 東京", "", " ").toDF("s")
+      .select(term_counts(split(col("s"), "\\s+")).as("t"))
+      .collect().map(_.getSeq[Row](0).map(r => (r.getString(0), r.getDouble(1))))
+    // leading whitespace leaves an empty first token, which is not a term;
+    // terms keep their case and come in order of first occurrence
+    assert(rows(0) == Seq(("b", 2.0), ("a", 1.0), ("B", 1.0)))
+    assert(rows(1) == Seq(("école", 2.0), ("über", 1.0), ("東京", 3.0)))
+    assert(rows(2).isEmpty && rows(3).isEmpty)
   }
 
   test("SQL registration exposes functions to spark.sql") {

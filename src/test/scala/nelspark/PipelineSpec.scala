@@ -3,6 +3,11 @@ package nelspark
 import nelspark.gen.CorpusGen
 import nelspark.pipeline._
 import nelspark.store.{ResumablePipeline, SnapshotStore}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** End-to-end gate tests (SURVEY.md §5.4–5.5; BASELINE.json binding
@@ -79,10 +84,21 @@ class PipelineSpec extends SparkSpec {
     val n = 500
     val edges = (1 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("a_id", "b_id")
     val ids = (1 to n).map(_.toLong).toDF("mention_id")
-    val got = Cluster.connectedComponents(edges, ids,
-      ErConfig(maxIter = 30, ccLocalMax = 0))
-    assert(got.select("cluster_id").distinct().count() == 1L)
-    assert(got.agg(min("cluster_id")).head().getLong(0) == 1L)
+    // exactly 9 rounds, as the fixpoint took before its exchanges were cut
+    val rounds = 9
+    val cfg = ErConfig(maxIter = rounds, ccLocalMax = 0)
+    val (got, jobs) = countJobs(Cluster.connectedComponents(edges, ids, cfg).collect())
+    intercept[IllegalStateException](
+      Cluster.connectedComponents(edges, ids, cfg.copy(maxIter = rounds - 1)))
+    assert(got.map(_.getLong(1)).distinct.toSeq == Seq(1L))
+    assert(got.length == n)
+    // per round: the checkpointed large-star + small-star (3 shuffle
+    // stages and the checkpoint) and the one-aggregate star-forest test;
+    // plus the edge checkpoint (which also counts the edges) and the
+    // final assignment join. With an aggregate + semi-join star test and
+    // an exchange of its own for small-star's window, this took 92.
+    info(s"jobs=$jobs over $rounds rounds")
+    assert(jobs <= 5 * rounds + 5, s"$jobs jobs")
   }
 
   test("local and distributed CC paths agree on a pseudo-random graph") {
@@ -137,6 +153,83 @@ class PipelineSpec extends SparkSpec {
     assert((m.getAs[Long]("n_blocks"), m.getAs[Long]("n_chained"),
       m.getAs[Long]("n_purged"), m.getAs[Long]("max_block")) ==
       (1L + cfg.bands, 1L, cfg.bands.toLong, 9L))
+  }
+
+  /** Row count and order-independent hash of `cols`. */
+  private def fingerprint(df: DataFrame, cols: String*): (Long, BigDecimal) = {
+    val r = df.agg(count(lit(1)),
+      sum(xxhash64(cols.map(col): _*).cast("decimal(38,0)"))).head()
+    (r.getLong(0), BigDecimal(r.getDecimal(1)))
+  }
+
+  private def hotCorpus(seed: Long) =
+    CorpusGen.generate(spark, 2000L, 400L, seed, hotFrac = 0.6, hotEntities = 3)
+
+  test("Block.pairs emits the pinned pair sets of the hot corpus, clique and chain tiers") {
+    // pinned from the self-join form of Block.pairs (clique self-join,
+    // chain tier joined back to the mentions for ctx_sig)
+    val pinned = Seq(
+      (1L, 200, 51132L, "-3124873066410018529642"),
+      (3L, 200, 48611L, "-341033858140187206287"),
+      (1L, 2, 48392L, "-2774627699973901725784"))
+    for ((seed, group) <- pinned.groupBy(_._1)) {
+      val extracted = Extract(CorpusGen.pages(hotCorpus(seed))).cache()
+      for ((_, cliqueMax, n, hash) <- group) {
+        val cfg = ErConfig(cliqueMax = cliqueMax)
+        val mentions = Mentions(extracted, cfg)
+        val (pairs, _) = Block.pairs(Block.keys(mentions, cfg), mentions, cfg)
+        assert(fingerprint(pairs, "a_id", "b_id", "a_norm", "b_norm", "a_url", "b_url") ==
+          ((n, BigDecimal(hash))), s"seed $seed, cliqueMax $cliqueMax")
+      }
+      extracted.unpersist()
+    }
+  }
+
+  test("Block.pairs plans no join and at most two exchanges") {
+    val mentions = Mentions(Extract(pages))
+    val (pairs, _) = Block.pairs(Block.keys(mentions, ErConfig()), mentions, ErConfig(),
+      Some(org.apache.spark.sql.Observation()))
+    val plan = pairs.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, plan.treeString)
+    assert(plan.collect { case x: Exchange => x }.size <= 2, plan.treeString)
+  }
+
+  test("Tfidf.pageVectors equals the explode + groupBy(url, term) form on the flat and hot corpora") {
+    // the token count as a (url, term) shuffle of every token; the rest
+    // of the vector build as in Tfidf.pageVectors
+    def reference(extracted: DataFrame, topK: Int): DataFrame = {
+      val terms = extracted
+        .select(col("url"), explode(split(lower(col("text")), "\\s+")).as("term"))
+        .filter(length(col("term")) > 0)
+        .groupBy("url", "term").agg(count("*").cast("double").as("tf"))
+      val nDf = extracted.agg(approx_count_distinct("url").cast("double").as("n_docs"))
+      terms
+        .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
+        .crossJoin(broadcast(nDf))
+        .withColumn("w", col("tf") * (log((col("n_docs") + 1.0) / (col("df") + 1.0)) + 1.0))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy("url").orderBy(desc("w"), asc("term"))))
+        .filter(col("rk") <= topK)
+        .groupBy("url")
+        .agg(collect_list(struct(xxhash64(col("term")).as("h"), col("w"))).as("hw"))
+        .select(col("url"), sort_array(col("hw")).as("hw"))
+        .withColumn("nrm", sqrt(expr("aggregate(hw, 0d, (acc, y) -> acc + y.w * y.w)")))
+        .select(col("url"), expr("transform(hw, x -> x.h)").as("hs"),
+          expr("transform(hw, x -> cast(x.w / nrm as float))").as("ws"))
+    }
+    for ((name, gen) <- Seq(
+        "flat" -> CorpusGen.generate(spark, 1000L, 200L, seed = 1L, hotFrac = 0.0),
+        "hot" -> hotCorpus(1L))) {
+      val extracted = Extract(CorpusGen.pages(gen)).cache()
+      val got = Tfidf.pageVectors(extracted)
+      val want = reference(extracted, 32)
+      assert(got.count() == want.count(), name)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, name)
+      extracted.unpersist()
+    }
   }
 
   test("Pipeline.run and ResumablePipeline.run assign the same clusters, on commit and on replay") {
