@@ -289,8 +289,9 @@ object Fixtures {
     * width, height, n_frames, sample_rate). Pinning it lets DuckDB
     * re-derive the frame-sampling PLAN (stride-30 indices capped at 16
     * frames) in closed form — the stub hash itself stays test-gated
-    * (MediaSpec), exactly like the minhash signatures. Same `:v1` caveat
-    * as ensureIvf: the tag's kernel hash does not cover MediaOps. */
+    * (MediaSpec), exactly like the minhash signatures. As for ensureIvf,
+    * the kernel-hash tag component covers nelspark/media, so a recompiled
+    * MediaOps regenerates this fixture; `:v1` is for contract bumps. */
   def ensureMediaMeta(spark: SparkSession, docsParquet: String,
       dir: String): String =
     ensurePinned(dir, tag("media_meta:video:v1", docsParquet)) { tmp =>

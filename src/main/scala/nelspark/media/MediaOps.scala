@@ -8,18 +8,15 @@ case class MediaMeta(
     media_id: Long, kind: String, n_bytes: Long,
     width: Int, height: Int, n_frames: Int, sample_rate: Int)
 
-/** One decoded-feature row per media object (fixed-length feature vec). */
-case class MediaFeatures(media_id: Long, features: Array[Float])
-
 /**
  * Multimodal column plumbing: image/audio/video as opaque `binary`
  * columns with typed metadata. The Spark side — schema, partition-wise
  * batched processing (mapPartitions, one decoder init per partition, the
- * same batch shape a JNI/FFmpeg/Pillow binding needs), feature schema —
+ * same batch shape a JNI/FFmpeg/Pillow binding needs), frame sampling —
  * is real and tested; the byte-level decode itself is a clearly-marked
- * STUB (no media libraries ship in this container): it derives
- * deterministic pseudo-metadata/features from the bytes so the
- * distributed plumbing is exercisable end-to-end.
+ * STUB for payloads without a recognized header (no media libraries ship
+ * in this container): it derives deterministic pseudo-metadata from the
+ * bytes so the distributed plumbing is exercisable end-to-end.
  */
 object MediaOps {
 
@@ -123,24 +120,6 @@ object MediaOps {
             val (w, h, nf, sr) = decodeStub(kind, bytes)
             MediaMeta(id, kind, bytes.length.toLong, w, h, nf, sr)
           }
-        }
-      }
-  }
-
-  /** Feature extraction stub: fixed-length deterministic pseudo-embedding
-    * per media object (batched per partition like decodeMeta). */
-  def extractFeatures(media: DataFrame, dim: Int = 16): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id").cast("long"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          val fs = Array.tabulate(dim) { i =>
-            val h = nelspark.expr.Kernels.hashBytes(bytes, 0xFEA7L + i)
-            (h.toDouble / Long.MaxValue).toFloat // STUB: model forward pass
-          }
-          MediaFeatures(id, fs)
         }
       }
   }

@@ -41,18 +41,10 @@ object ModelTables {
       .withColumn("p", col("cnt") / sum("cnt").over(Window.partitionBy("name_norm")))
       .select("name_norm", "entity_id", "p")
 
-  /** term_df(term, df): corpus document frequency (A3). At 10^12 rows use
-    * approx_count_distinct (HLL) — exact variant kept for small corpora. */
-  def termDf(extracted: DataFrame, approx: Boolean = false): DataFrame = {
-    val terms = extracted
-      .select(col("url"), explode(split(lower(col("text")), "\\s+")).as("term"))
-      .filter(length(col("term")) > 0)
-    if (approx) terms.groupBy("term").agg(approx_count_distinct("url").as("df"))
-    else terms.groupBy("term").agg(countDistinct("url").as("df"))
-  }
-
   /** entity_tfidf(entity_id, term, w): per-entity context BoW with tf-idf
-    * weights, L2-normalized per entity (A4, nel/features/context.py). */
+    * weights, L2-normalized per entity (A4, nel/features/context.py). The
+    * entity count is a 1-row agg cross-joined back by broadcast, as in
+    * [[entityPrior]], so building the plan launches no job. */
   def entityTfidf(extracted: DataFrame, labeled: DataFrame): DataFrame = {
     val pageTerms = extracted
       .select(col("url"), explode(split(lower(col("text")), "\\s+")).as("term"))
@@ -60,49 +52,13 @@ object ModelTables {
     val entTerms = pageTerms
       .join(labeled.select("url", "entity_id").distinct(), Seq("url"))
       .groupBy("entity_id", "term").agg(count(lit(1)).cast("double").as("tf"))
-    val nEntities = labeled.select(approx_count_distinct("entity_id")).head().getLong(0)
+    val nEntities = labeled.agg(approx_count_distinct("entity_id").as("n_ent"))
     val dfT = entTerms.groupBy("term").agg(count(lit(1)).as("df"))
-    val weighted = entTerms.join(dfT, "term")
-      .withColumn("w", col("tf") * (log(lit(nEntities + 1.0) / (col("df") + 1.0)) + 1.0))
+    val weighted = entTerms.join(dfT, "term").crossJoin(broadcast(nEntities))
+      .withColumn("w",
+        col("tf") * (log((col("n_ent") + 1.0) / (col("df") + 1.0)) + 1.0))
     val norms = weighted.groupBy("entity_id").agg(sqrt(sum(col("w") * col("w"))).as("nrm"))
     weighted.join(norms, "entity_id")
       .select(col("entity_id"), col("term"), (col("w") / col("nrm")).as("w"))
-  }
-}
-
-/**
- * L3 threshold calibration (replaces nel's sklearn NIL-resolver training,
- * nel/learn/resolving.py): sweep the match threshold τ over score buckets
- * of labeled pairs, pick the F1-maximizing cut. Distributed bucket agg +
- * tiny driver-side prefix scan (SURVEY.md §2.9).
- */
-object Calibrate {
-
-  /** @param scored  (a_id, b_id, score)
-    * @param labeled labeled_pairs (a_id, b_id, is_match)
-    * @return (bestTau, bestF1) over `buckets` evenly-spaced cuts in [0,1] */
-  def threshold(scored: DataFrame, labeled: DataFrame, buckets: Int = 200): (Double, Double) = {
-    val joined = scored.join(labeled, Seq("a_id", "b_id"))
-      .select(least(greatest(floor(col("score") * buckets), lit(0)),
-        lit(buckets - 1)).cast("int").as("bucket"), col("is_match"))
-      .groupBy("bucket").agg(
-        sum(when(col("is_match"), 1L).otherwise(0L)).as("pos"),
-        sum(when(!col("is_match"), 1L).otherwise(0L)).as("neg"))
-      .collect()
-      .map(r => (r.getAs[Int]("bucket"), r.getAs[Long]("pos"), r.getAs[Long]("neg")))
-      .sortBy(_._1)
-    val totalPos = joined.map(_._2).sum
-    // scan cuts from high to low: predict-positive = score >= cut
-    var tp = 0L; var fp = 0L
-    var best = (1.01, 0.0)
-    for (b <- (0 until buckets).reverse) {
-      joined.find(_._1 == b).foreach { case (_, pos, neg) => tp += pos; fp += neg }
-      val fn = totalPos - tp
-      val prec = if (tp + fp == 0) 0.0 else tp.toDouble / (tp + fp)
-      val rec = if (tp + fn == 0) 0.0 else tp.toDouble / (tp + fn)
-      val f1 = if (prec + rec == 0) 0.0 else 2 * prec * rec / (prec + rec)
-      if (f1 > best._2) best = (b.toDouble / buckets, f1)
-    }
-    best
   }
 }

@@ -1,6 +1,6 @@
 package nelspark.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,9 +11,8 @@ import org.apache.spark.sql.functions._
  *  1. block-size tiering in [[nelspark.pipeline.Block.pairs]] (cap the
  *     quadratic tier, chain the Zipfian head, purge stop-keys);
  *  2. AQE skew-join splitting (on by default as a runtime backstop);
- *  3. the utilities here — explicit key salting for hot-key equi-joins
- *     (e.g. the alias-lookup join J1 where name frequency is Zipfian)
- *     and range partitioning for bounded per-task pair generation.
+ *  3. [[saltedJoin]] — explicit key salting for hot-key equi-joins
+ *     (e.g. the alias-lookup join J1 where name frequency is Zipfian).
  */
 object Skew {
 
@@ -34,17 +33,4 @@ object Skew {
       explode(sequence(lit(0), lit(buckets - 1))))
     salted.join(exploded, Seq(key, "_salt")).drop("_salt")
   }
-
-  /** Range-partition a blocked Dataset by its block key (north_star:
-    * "salted, range-partitioned Datasets") — bounds per-task memory for
-    * pair generation and gives contiguous key ranges to each task. */
-  def rangeByBlock(blocked: DataFrame, partitions: Int,
-      keyCols: String*): DataFrame =
-    blocked.repartitionByRange(partitions, keyCols.map(col): _*)
-
-  /** Top-k hot keys with counts — the stats pre-pass used to pick salt
-    * buckets / purge lists (SURVEY.md §4 "hot-key stats"). */
-  def hotKeys(df: DataFrame, key: String, k: Int = 100): DataFrame =
-    df.groupBy(key).agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc(key)).limit(k)
 }

@@ -64,21 +64,3 @@ object Coref {
       .toDF("mention_id", "chain_id")
   }
 }
-
-/** P5: alias/acronym form expansion for a normalized name (reference
-  * analog: acronym handling in nel/process/coref.py + candidates.py). */
-object AliasForms {
-  /** Deterministic alternate lookup forms: full, first+last, initials+last,
-    * acronym. Used to widen candidate generation (J1). */
-  def forms(nameNorm: String): Seq[String] = {
-    val t = nameNorm.split(' ').filter(_.nonEmpty)
-    if (t.isEmpty) return Seq.empty
-    val out = scala.collection.mutable.LinkedHashSet(nameNorm)
-    if (t.length >= 2) {
-      out += s"${t.head} ${t.last}"
-      out += s"${t.head.take(1)} ${t.last}"
-      out += t.map(_.take(1)).mkString("")
-    }
-    out.toSeq
-  }
-}

@@ -27,9 +27,7 @@ object Linker {
       saltBuckets: Int = 16)
 
   /** Context cosine for (mention, entity) pairs: page terms × entity
-    * tf-idf sparse dot (both sides L2-normalized upstream). ONE
-    * definition shared by candidateFeatures and featurize — a drift
-    * between the two would silently skew Ranker.fit's negatives. */
+    * tf-idf sparse dot (both sides L2-normalized upstream). */
   private def ctxCosine(pairs: DataFrame, pageTerms: DataFrame,
       entityTfidf: DataFrame): DataFrame =
     pairs.select("mention_id", "url", "entity_id")
@@ -40,8 +38,8 @@ object Linker {
 
   /**
    * Candidate feature assembly (J1 → W2 → J3/L1): one row per surviving
-   * (mention, candidate) with the three ranking features. Shared by
-   * [[link]] (scoring) and [[Ranker.fit]] (L2 training).
+   * (mention, candidate) with the three ranking features that [[link]]
+   * scores.
    *
    * @return (mention_id, entity_id, p_prior, p_name, ctx_cos)
    */
@@ -69,31 +67,6 @@ object Linker {
       .join(ctxCosine(top, pageTerms, entityTfidf),
         Seq("mention_id", "entity_id"), "left")
       .na.fill(0.0, Seq("ctx_cos"))
-  }
-
-  /**
-   * Feature computation for ARBITRARY (mention, entity) pairs — same
-   * three features as [[candidateFeatures]] but with the candidate set
-   * given by the caller instead of generated from the alias store. Used
-   * by [[Ranker.fit]] to featurize synthesized negative pairs honestly
-   * (p_name really is the nameProb lookup, 0.0 on miss; ctx_cos really
-   * is the context cosine).
-   *
-   * @param pairs (mention_id, url, name_norm, entity_id)
-   * @return (mention_id, entity_id, p_prior, p_name, ctx_cos)
-   */
-  def featurize(pairs: DataFrame, pageTerms: DataFrame, entityPrior: DataFrame,
-      nameProb: DataFrame, entityTfidf: DataFrame): DataFrame = {
-    val withName = pairs
-      .join(nameProb.withColumnRenamed("p", "p_name"),
-        Seq("name_norm", "entity_id"), "left").na.fill(0.0, Seq("p_name"))
-    val withPrior = withName
-      .join(entityPrior.withColumnRenamed("p", "p_prior"),
-        Seq("entity_id"), "left").na.fill(0.0, Seq("p_prior"))
-    withPrior.join(ctxCosine(pairs, pageTerms, entityTfidf),
-        Seq("mention_id", "entity_id"), "left")
-      .na.fill(0.0, Seq("ctx_cos"))
-      .select("mention_id", "entity_id", "p_prior", "p_name", "ctx_cos")
   }
 
   /**

