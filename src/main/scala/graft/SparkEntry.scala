@@ -472,7 +472,7 @@ object SparkEntry {
       val shards = nelspark.sources.Conll.ensureShards(s,
         "/root/testdata/sf0.001/documents.parquet",
         "/tmp/graft_conll_shards", 100, 4)
-      nelspark.sources.Conll.mentionsMultiFile(s, shards)
+      nelspark.sources.Conll.mentions(s, shards)
         .orderBy("doc_idx", "begin_tok")
     }),
 

@@ -28,11 +28,7 @@ object Main {
     val shm = new java.io.File("/dev/shm")
     if (!shm.isDirectory) return "/tmp"
     val base = new java.io.File(shm, "nelspark-local")
-    def rmTree(f: java.io.File): Unit = {
-      if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rmTree)
-      f.delete(): Unit
-    }
+    import nelspark.gen.Fixtures.rmTree
     if (base.isDirectory) {
       Option(base.listFiles()).getOrElse(Array.empty[java.io.File]).foreach { d =>
         val pidAlive = d.getName.nonEmpty && d.getName.forall(_.isDigit) &&

@@ -9,8 +9,7 @@ import org.apache.xbean.asm9.{ClassReader, ClassWriter}
 import nelspark.functions._
 
 /**
- * Pinned cross-engine fixtures (same pattern as
- * [[nelspark.sources.Conll.ensureFixture]]): a deterministic artifact is
+ * Pinned cross-engine fixtures: a deterministic artifact is
  * derived ONCE from the canonical sf0.001 tables and written to a fixed
  * path that both the Spark query and its static DuckDB oracle SQL read.
  * This upgrades custom-hash operators from rows-only to oracle-exact:
@@ -25,9 +24,12 @@ import nelspark.functions._
  * md5 of every compiled class under [[kernelPackages]], debug attributes
  * dropped | input parquet file metadata). A recompiled kernel, changed
  * params, or regenerated input all change the tag, and a mismatch
- * regenerates the fixture atomically (temp dir + rename, the
- * Conll.ensureShards contract) — no manual `rm` needed, and readers
- * never observe a half-written fixture.
+ * regenerates the fixture atomically (temp dir + rename) — no manual
+ * `rm` needed, and readers never observe a half-written fixture.
+ * [[ensurePinned]] is the one pin protocol for directory fixtures and
+ * [[ensurePinnedFiles]] its form for single files (the CoNLL and TAC
+ * fixtures in [[nelspark.sources]], which the oracle SQL reads by
+ * literal file path).
  */
 object Fixtures {
 
@@ -113,17 +115,23 @@ object Fixtures {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  private def rmTree(f: File): Unit = {
-    if (f.isDirectory)
+  /** Recursive delete that does not descend into a symlinked directory
+    * (it deletes the link, not the target's contents). */
+  private[nelspark] def rmTree(f: File): Unit = {
+    if (f.isDirectory && !Files.isSymbolicLink(f.toPath))
       Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(rmTree)
     f.delete(): Unit
   }
 
-  private def tagOk(dir: String, expected: String): Boolean = {
-    val tagFile = new File(dir, "_FIXTURE_TAG")
-    new File(dir, "_SUCCESS").exists() && tagFile.exists() &&
-      new String(Files.readAllBytes(tagFile.toPath), "UTF-8").trim == expected
+  private def tagMatches(tagFile: String, expected: String): Boolean = {
+    val p = Paths.get(tagFile)
+    Files.exists(p) &&
+      new String(Files.readAllBytes(p), "UTF-8").trim == expected
   }
+
+  private def tagOk(dir: String, expected: String): Boolean =
+    new File(dir, "_SUCCESS").exists() &&
+      tagMatches(s"$dir/_FIXTURE_TAG", expected)
 
   /** True iff the pid embedded in a `<name>.tmp.<pid>` / `<name>.old.<pid>`
     * leftover belongs to a live process — its generation may be in flight,
@@ -142,22 +150,27 @@ object Fixtures {
     } catch { case _: NumberFormatException => false }
   }
 
-  /** Validate-or-regenerate: `gen` writes the fixture parquet into the
-    * temp path it is handed; the tag sidecar is added and the whole dir
-    * atomically renamed into place. Returns `dir`. */
+  /** Delete the `<path>.tmp.<pid>` / `<path>.old.<pid>` leftovers of
+    * crashed earlier generations — but never a live sibling JVM's
+    * in-flight one (its embedded pid is still alive). */
+  private def sweep(path: String): Unit = {
+    val p = Paths.get(path).toAbsolutePath
+    val leftover = java.util.regex.Pattern.quote(p.getFileName.toString) +
+      "\\.(tmp|old)\\.\\d+"
+    Option(p.getParent.toFile.listFiles()).getOrElse(Array.empty[File])
+      .filter(f => f.getName.matches(leftover) && !ownerAlive(f.getName))
+      .foreach(rmTree)
+  }
+
+  /** Validate-or-regenerate: `gen` writes the fixture into the temp dir
+    * it is handed (and leaves a `_SUCCESS` there); the tag sidecar is
+    * added and the whole dir atomically renamed into place, so a reader
+    * globbing the dir sees either the whole old or the whole new fixture.
+    * Leftovers of dead runs are swept on every call. Returns `dir`. */
   def ensurePinned(dir: String, tagValue: String)(gen: String => Unit): String = {
+    sweep(dir)
     if (!tagOk(dir, tagValue)) {
       val pid = ProcessHandle.current().pid()
-      val name = Paths.get(dir).getFileName.toString
-      // sweep leftovers of crashed prior swaps (same naming scheme) —
-      // but never a live sibling JVM's in-flight generation (its embedded
-      // pid is still alive)
-      Option(Paths.get(dir).toAbsolutePath.getParent.toFile.listFiles())
-        .getOrElse(Array.empty[File])
-        .filter(_.getName.matches(
-          java.util.regex.Pattern.quote(name) + "\\.(tmp|old)\\.\\d+"))
-        .filterNot(f => ownerAlive(f.getName))
-        .foreach(rmTree)
       val tmp = s"$dir.tmp.$pid"
       gen(tmp)
       Files.write(Paths.get(tmp, "_FIXTURE_TAG"),
@@ -173,10 +186,34 @@ object Fixtures {
         // a concurrent JVM can win the swap race; if what it installed
         // carries our tag, its fixture is byte-equivalent — accept it
         case _: java.io.IOException if tagOk(dir, tagValue) =>
-          rmTree(new File(s"$dir.tmp.$pid"))
+          rmTree(new File(tmp))
       }
     }
     dir
+  }
+
+  /** File form of [[ensurePinned]], for fixtures read at literal file
+    * paths: skipped when every one of `files` exists and `tagFile` holds
+    * `tagValue`. Otherwise `contents` (one string per file, in order) is
+    * written through pid-suffixed temp files and atomic moves, the tag
+    * last — a crash in between leaves a missing or stale tag, and the
+    * next call regenerates. Leftovers of dead runs are swept on every
+    * call. */
+  def ensurePinnedFiles(tagFile: String, tagValue: String, files: Seq[String])(
+      contents: => Seq[String]): Unit = {
+    val all = files :+ tagFile
+    all.foreach(sweep)
+    if (!files.forall(f => new File(f).exists()) || !tagMatches(tagFile, tagValue)) {
+      val data = contents
+      require(data.size == files.size, s"${data.size} contents for ${files.size} files")
+      val pid = ProcessHandle.current().pid()
+      all.zip(data :+ tagValue).foreach { case (f, c) =>
+        val tmp = Paths.get(s"$f.tmp.$pid")
+        Files.writeString(tmp, c)
+        Files.move(tmp, Paths.get(f),
+          StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+      }
+    }
   }
 
   /** (doc_id, band, bh) MinHash band keys of the sf0.001 documents table

@@ -3,7 +3,7 @@ package nelspark.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import nelspark.gen.Fixtures
 
 /**
  * SRC3: TAC-KBP entity-linking corpus reader (the reference parses the
@@ -36,13 +36,6 @@ object Tac {
   private def xmlEscape(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
-  private def writeAtomic(path: String, content: String): Unit = {
-    val tmp = Paths.get(path + ".tmp." + ProcessHandle.current().pid())
-    Files.writeString(tmp, content)
-    Files.move(tmp, Paths.get(path),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-  }
-
   /**
    * Deterministically derive a TAC-shaped fixture from a documents
    * parquet table (first `nDocs` docs by doc_id) and write it
@@ -65,44 +58,39 @@ object Tac {
    */
   def ensureFixture(spark: SparkSession, docsParquet: String, base: String,
       nDocs: Int = 50): (String, String, String) = {
-    val (xp0, lp0, tp0) =
+    val (xp, lp, tp) =
       (s"${base}_queries.xml", s"${base}_links.tsv", s"${base}_twin.tsv")
     // Skip-if-current — same tag contract as Conll.ensureFixture (`:v1`
-    // = this generator's code version; bump on logic changes here).
-    val tagVal = nelspark.gen.Fixtures.tag(s"tac:v1:$nDocs", docsParquet)
-    val tagPath = Paths.get(base + ".tag")
-    if (Seq(xp0, lp0, tp0).forall(p => Files.exists(Paths.get(p))) &&
-        Files.exists(tagPath) && Files.readString(tagPath).trim == tagVal)
-      return (xp0, lp0, tp0)
-    val docs = spark.read.parquet(docsParquet).select("doc_id", "text")
-      .filter(col("doc_id") < nDocs).orderBy("doc_id").collect()
-    val xml = new StringBuilder("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<kbpentlink>\n")
-    val links = new StringBuilder
-    val twin = new StringBuilder
-    docs.foreach { r =>
-      val docId = r.getLong(0)
-      val qid = f"EL_$docId%05d"
-      val toks = r.getString(1).split("\\s+").iterator
-        .map(_.replaceAll("[\"\\\\\t<>&']", "")).filter(_.nonEmpty).take(2).toSeq
-      val name0 = toks.mkString(" ")
-      val name = if (docId % 10 == 9) name0 + " &co" else name0
-      val beg = 0L
-      val end = math.max(name.length - 1, 0).toLong // TAC inclusive end offset
-      val kbId = if (docId % 5 == 0) "NIL" else f"E${docId % 7}%03d"
-      val etype = Seq("PER", "ORG", "GPE")((docId % 3).toInt)
-      xml.append(s"""  <query id="$qid">\n""")
-        .append(s"    <name>${xmlEscape(name)}</name>\n")
-        .append(s"    <docid>DOC_$docId</docid>\n")
-        .append(s"    <beg>$beg</beg>\n    <end>$end</end>\n  </query>\n")
-      links.append(qid).append('\t').append(kbId).append('\t').append(etype).append('\n')
-      twin.append(qid).append('\t').append(s"DOC_$docId").append('\t')
-        .append(name).append('\t').append(beg).append('\t').append(end).append('\n')
+    // = this generator's contract version).
+    Fixtures.ensurePinnedFiles(base + ".tag",
+        Fixtures.tag(s"tac:v1:$nDocs", docsParquet), Seq(xp, lp, tp)) {
+      val docs = spark.read.parquet(docsParquet).select("doc_id", "text")
+        .filter(col("doc_id") < nDocs).orderBy("doc_id").collect()
+      val xml = new StringBuilder("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<kbpentlink>\n")
+      val links = new StringBuilder
+      val twin = new StringBuilder
+      docs.foreach { r =>
+        val docId = r.getLong(0)
+        val qid = f"EL_$docId%05d"
+        val toks = r.getString(1).split("\\s+").iterator
+          .map(_.replaceAll("[\"\\\\\t<>&']", "")).filter(_.nonEmpty).take(2).toSeq
+        val name0 = toks.mkString(" ")
+        val name = if (docId % 10 == 9) name0 + " &co" else name0
+        val beg = 0L
+        val end = math.max(name.length - 1, 0).toLong // TAC inclusive end offset
+        val kbId = if (docId % 5 == 0) "NIL" else f"E${docId % 7}%03d"
+        val etype = Seq("PER", "ORG", "GPE")((docId % 3).toInt)
+        xml.append(s"""  <query id="$qid">\n""")
+          .append(s"    <name>${xmlEscape(name)}</name>\n")
+          .append(s"    <docid>DOC_$docId</docid>\n")
+          .append(s"    <beg>$beg</beg>\n    <end>$end</end>\n  </query>\n")
+        links.append(qid).append('\t').append(kbId).append('\t').append(etype).append('\n')
+        twin.append(qid).append('\t').append(s"DOC_$docId").append('\t')
+          .append(name).append('\t').append(beg).append('\t').append(end).append('\n')
+      }
+      xml.append("</kbpentlink>\n")
+      Seq(xml.toString, links.toString, twin.toString)
     }
-    xml.append("</kbpentlink>\n")
-    val (xp, lp, tp) = (xp0, lp0, tp0)
-    writeAtomic(xp, xml.toString); writeAtomic(lp, links.toString)
-    writeAtomic(tp, twin.toString)
-    writeAtomic(tagPath.toString, tagVal)
     (xp, lp, tp)
   }
 

@@ -60,7 +60,7 @@ class ConllSpec extends SparkSpec {
   }
 
   test("multi-file regroup == single-file path (incl. mid-doc shard cuts)") {
-    val p = "/tmp/conll_spec_fixture_mf.tsv"
+    val p = s"${tempDir("conll_spec_fixture_mf")}/fixture.tsv"
     Conll.ensureFixture(spark, "/root/testdata/sf0.001/documents.parquet", p, 20)
     val lines = Files.readAllLines(java.nio.file.Paths.get(p))
     val dir = java.nio.file.Paths.get(tempDir("conll_mf"))
@@ -73,15 +73,15 @@ class ConllSpec extends SparkSpec {
         lines.subList(cuts(i), cuts(i + 1)))
     val single = Conll.mentions(spark, p)
       .collect().map(_.toString).sorted.toSeq
-    val multi = Conll.mentionsMultiFile(spark, dir.toString)
+    val multi = Conll.mentions(spark, dir.toString)
       .collect().map(_.toString).sorted.toSeq
     assert(multi == single, "multi-file mentions differ from single-file")
-    val toks = Conll.tokensMultiFile(spark, dir.toString)
+    val toks = Conll.tokens(spark, dir.toString)
     assert(toks.select(countDistinct("doc_idx")).head.getLong(0) == 20L)
   }
 
   test("ensureShards reconstitutes the single-file bytes and is stable") {
-    val dir = "/tmp/conll_spec_shards"
+    val dir = s"${tempDir("conll_spec_shards")}/shards"
     Conll.ensureShards(spark, "/root/testdata/sf0.001/documents.parquet",
       dir, 20, 3)
     def cat(): Array[Byte] = {
@@ -112,13 +112,13 @@ class ConllSpec extends SparkSpec {
     // the sharded regroup over THIS fixture matches the single-file path
     val single2 = Conll.mentions(spark, dir + ".tsv")
       .collect().map(_.toString).sorted.toSeq
-    val multi = Conll.mentionsMultiFile(spark, dir)
+    val multi = Conll.mentions(spark, dir)
       .collect().map(_.toString).sorted.toSeq
     assert(multi == single2)
   }
 
   test("fixture generation is idempotent and parses to >0 mentions") {
-    val p = "/tmp/conll_spec_fixture.tsv"
+    val p = s"${tempDir("conll_spec_fixture")}/fixture.tsv"
     Conll.ensureFixture(spark, "/root/testdata/sf0.001/documents.parquet", p, 20)
     val bytes1 = Files.readAllBytes(java.nio.file.Paths.get(p))
     Conll.ensureFixture(spark, "/root/testdata/sf0.001/documents.parquet", p, 20)

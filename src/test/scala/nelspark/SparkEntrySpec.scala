@@ -79,7 +79,7 @@ class SparkEntrySpec extends SparkSpec {
     // version must regenerate instead of silently satisfying the oracle
     import nelspark.gen.Fixtures
     val docs = "/root/testdata/sf0.001/documents.parquet"
-    val dir = "/tmp/graft_fixture_selfcheck.parquet"
+    val dir = s"${tempDir("graft_fixture_selfcheck")}/fp.parquet"
     def rows() = spark.read.parquet(dir).orderBy("doc_id")
       .collect().map(_.toString).toSeq
     Fixtures.ensureFingerprints(spark, docs, dir)
@@ -105,6 +105,33 @@ class SparkEntrySpec extends SparkSpec {
     java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "_SUCCESS"))
     Fixtures.ensureFingerprints(spark, docs, dir)
     assert(new java.io.File(dir, "_SUCCESS").exists() && rows() == fresh)
+    // the single-file form (Fixtures.ensurePinnedFiles): a valid call
+    // rewrites nothing (mtimes pinned to the epoch stay there); a stale
+    // tag or a missing file regenerates byte-identical output
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.FileTime
+    val base = tempDir("graft_fixture_selfcheck_files")
+    def bytes(ps: Seq[String]) = ps.map(p => Files.readAllBytes(Paths.get(p)).toSeq)
+    def pinMtimes(ps: Seq[String]): Unit =
+      ps.foreach(p => Files.setLastModifiedTime(Paths.get(p), FileTime.fromMillis(0L)))
+    def mtimes(ps: Seq[String]) =
+      ps.map(p => Files.getLastModifiedTime(Paths.get(p)).toMillis)
+    val conll = Seq(nelspark.sources.Conll.ensureFixture(spark, docs, s"$base/c.tsv", 5))
+    val (xml, links, twin) = nelspark.sources.Tac.ensureFixture(spark, docs, s"$base/t", 5)
+    val tac = Seq(xml, links, twin)
+    val (conll0, tac0) = (bytes(conll), bytes(tac))
+    pinMtimes(conll ++ tac)
+    nelspark.sources.Conll.ensureFixture(spark, docs, s"$base/c.tsv", 5)
+    nelspark.sources.Tac.ensureFixture(spark, docs, s"$base/t", 5)
+    assert(mtimes(conll ++ tac).forall(_ == 0L), "valid file fixture was rewritten")
+    Files.writeString(Paths.get(s"$base/c.tsv.tag"), "stale-kernel-tag")
+    nelspark.sources.Conll.ensureFixture(spark, docs, s"$base/c.tsv", 5)
+    assert(mtimes(conll).forall(_ != 0L), "stale-tag file fixture not regenerated")
+    assert(bytes(conll) == conll0, "regenerated CoNLL fixture differs")
+    Files.delete(Paths.get(links))
+    nelspark.sources.Tac.ensureFixture(spark, docs, s"$base/t", 5)
+    assert(mtimes(tac).forall(_ != 0L), "partial file fixture not regenerated")
+    assert(bytes(tac) == tac0, "regenerated TAC fixture differs")
   }
 
   test("fixture kernel hash ignores line numbers, not bytecode") {
@@ -149,10 +176,11 @@ class SparkEntrySpec extends SparkSpec {
     val livePid = parent.get().pid()
     assert(Fixtures.ownerAlive(s"x.tmp.$livePid"), "live sibling must be spared")
     // end-to-end through ensureShards: plant a live-owner tmp dir and a
-    // dead-owner old dir next to the shard set; regeneration must sweep
-    // only the dead one
+    // dead-owner old dir next to the shard set; the next call, which
+    // finds the set current and skips regeneration, must sweep only the
+    // dead one
     val docs = "/root/testdata/sf0.001/documents.parquet"
-    val dir = "/tmp/graft_shards_sweeptest"
+    val dir = s"${tempDir("graft_shards_sweeptest")}/shards"
     nelspark.sources.Conll.ensureShards(spark, docs, dir, nDocs = 5, nShards = 2)
     val live = Paths.get(s"$dir.tmp.$livePid")
     val dead = Paths.get(s"$dir.old.999999999")
@@ -162,7 +190,8 @@ class SparkEntrySpec extends SparkSpec {
       nelspark.sources.Conll.ensureShards(spark, docs, dir, nDocs = 5, nShards = 2)
       assert(Files.exists(live), "live sibling's in-flight dir was swept")
       assert(!Files.exists(dead), "dead leftover survived the sweep")
-      assert(Option(new java.io.File(dir).listFiles()).get.map(_.getName).sorted
+      assert(Option(new java.io.File(dir).listFiles()).get.map(_.getName)
+        .filter(_.endsWith(".tsv")).sorted
         .sameElements(Seq("shard000.tsv", "shard001.tsv")))
     } finally Files.deleteIfExists(live): Unit
   }

@@ -42,11 +42,12 @@ class TacSpec extends SparkSpec {
   }
 
   test("fixture is byte-stable; corpus joins all three sources exactly") {
-    val (xml1, links1, twin1) = Tac.ensureFixture(spark, docsPq, "/tmp/tac_spec", 30)
+    val base = s"${tempDir("tac_spec_fixture")}/tac"
+    val (xml1, links1, twin1) = Tac.ensureFixture(spark, docsPq, base, 30)
     val b1 = (Files.readAllBytes(java.nio.file.Paths.get(xml1)),
       Files.readAllBytes(java.nio.file.Paths.get(links1)),
       Files.readAllBytes(java.nio.file.Paths.get(twin1)))
-    val (xml2, links2, _) = Tac.ensureFixture(spark, docsPq, "/tmp/tac_spec", 30)
+    val (xml2, links2, _) = Tac.ensureFixture(spark, docsPq, base, 30)
     assert(java.util.Arrays.equals(b1._1, Files.readAllBytes(java.nio.file.Paths.get(xml2))))
     assert(java.util.Arrays.equals(b1._2, Files.readAllBytes(java.nio.file.Paths.get(links2))))
 
