@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import nelspark.util.Parquet
 
 /**
  * Round-6 optimization measurement harness (guide §1). NOT the driver
@@ -80,7 +81,7 @@ object BenchExtra {
       only: Option[Set[String]]): Unit = {
     // same untimed warmup as Bench
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/nation.parquet").count()
+    Parquet.read(spark, s"$sfDir/nation.parquet").count()
     val qs = SparkEntry.queryList.filter(q => only.forall(_.contains(q._1)))
     (1 to repeats).foreach { rep =>
       val results = qs.map { case (name, fn) =>
@@ -103,7 +104,7 @@ object BenchExtra {
   private def countMin(spark: SparkSession, sfDir: String, repeats: Int,
       only: Option[Set[String]]): Unit = {
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/nation.parquet").count()
+    Parquet.read(spark, s"$sfDir/nation.parquet").count()
     val qs = SparkEntry.queryList.filter(q => only.forall(_.contains(q._1)))
     val mins = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     (1 to repeats).foreach { _ =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import nelspark.functions._
+import nelspark.util.Parquet
 
 /**
  * Driver contract (see SURVEY.md §2 operator inventory): one query per
@@ -21,8 +22,9 @@ import nelspark.functions._
  */
 object SparkEntry {
 
+  /** An sf table, opened with its footer schema (no inference job). */
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(s, s"$dir/$name.parquet")
 
   /** Scale-adaptive scan fan-out (optimization guide §2.5 "input skew"):
     * the sf test tables are single-row-group parquet files, so their
@@ -438,7 +440,7 @@ object SparkEntry {
       val fx = nelspark.gen.Fixtures.ensureMinhashBands(s,
         "/root/testdata/sf0.001/documents.parquet",
         "/tmp/graft_minhash_bands.parquet")
-      nelspark.gen.Fixtures.bandPairs(s.read.parquet(fx))
+      nelspark.gen.Fixtures.bandPairs(Parquet.read(s, fx))
         .orderBy("a_id", "b_id")
     }),
 
@@ -458,7 +460,7 @@ object SparkEntry {
         "/root/testdata/sf0.001/documents.parquet",
         "/tmp/graft_simhash.parquet")
       nelspark.dedup.SimHashDedup
-        .simhashPairs(s.read.parquet(fx), "doc_id", "sh", maxHamming = 3)
+        .simhashPairs(Parquet.read(s, fx), "doc_id", "sh", maxHamming = 3)
         .orderBy("a_id", "b_id")
     }),
 
@@ -516,7 +518,7 @@ object SparkEntry {
         s"$dir/embeddings.parquet", "/tmp/graft_lsh_buckets.parquet")
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 50)
-      nelspark.ann.Ann.lshTopKPinned(s.read.parquet(fx), q, e, k = 5)
+      nelspark.ann.Ann.lshTopKPinned(Parquet.read(s, fx), q, e, k = 5)
         .withColumn("rn", col("rn").cast("long"))
         .orderBy("q_id", "rn")
     }),
@@ -663,7 +665,7 @@ object SparkEntry {
       val fx = nelspark.gen.Fixtures.ensureCorefMentions(s,
         "/root/testdata/sf0.001/documents.parquet",
         "/tmp/graft_coref_mentions.parquet")
-      nelspark.pipeline.Coref.chains(s.read.parquet(fx))
+      nelspark.pipeline.Coref.chains(Parquet.read(s, fx))
         .groupBy("chain_id").agg(count(lit(1)).as("sz"))
         .groupBy("sz").agg(count(lit(1)).as("n_chains"))
         .orderBy("sz")
@@ -677,7 +679,7 @@ object SparkEntry {
       val fx = nelspark.gen.Fixtures.ensureFingerprints(s,
         "/root/testdata/sf0.001/documents.parquet",
         "/tmp/graft_fingerprints.parquet")
-      s.read.parquet(fx)
+      Parquet.read(s, fx)
         .groupBy("fp").agg(count(lit(1)).as("n"), min("doc_id").as("keep_id"))
         .orderBy("keep_id")
     }),
@@ -899,7 +901,7 @@ object SparkEntry {
       import s.implicits._
       val fx = nelspark.gen.Fixtures.ensureMediaMeta(s,
         s"$dir/documents.parquet", "/tmp/graft_media_meta.parquet")
-      val meta = s.read.parquet(fx).as[nelspark.media.MediaMeta]
+      val meta = Parquet.read(s, fx).as[nelspark.media.MediaMeta]
       nelspark.media.MediaOps.frameSamplePlan(meta)
         .groupBy("media_id").agg(count(lit(1)).as("n_sampled"),
           max("frame_idx").as("last_frame"))
@@ -967,10 +969,10 @@ object SparkEntry {
       import s.implicits._
       val fx = nelspark.gen.Fixtures.ensureIvf(s,
         s"$dir/embeddings.parquet", "/tmp/graft_ivf.parquet")
-      val cent = s.read.parquet(s"$fx/centroids")
+      val cent = Parquet.read(s, s"$fx/centroids")
         .orderBy("cell").select("c_emb")
         .as[Array[Float]].collect() // nlist×dim floats — kilobytes
-      val cells = s.read.parquet(s"$fx/cells")
+      val cells = Parquet.read(s, s"$fx/cells")
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") < 50)
       nelspark.ann.Ann.ivfTopKPinned(cells, cent, q, e, k = 5, nprobe = 8)
@@ -990,8 +992,8 @@ object SparkEntry {
       val fx = nelspark.gen.Fixtures.ensureMinhashBands(s,
         "/root/testdata/sf0.001/documents.parquet",
         "/tmp/graft_minhash_bands.parquet")
-      val edges = nelspark.gen.Fixtures.bandPairs(s.read.parquet(fx))
-      val ids = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      val edges = nelspark.gen.Fixtures.bandPairs(Parquet.read(s, fx))
+      val ids = Parquet.read(s, "/root/testdata/sf0.001/documents.parquet")
         .select(col("doc_id"))
       Cluster.connectedComponents(edges, ids, ErConfig())
         .groupBy("cluster_id").agg(count(lit(1)).as("sz"))

@@ -1,6 +1,7 @@
 package nelspark
 
 import org.apache.spark.sql.SparkSession
+import nelspark.util.Parquet
 
 /**
  * spark-submit / sbt-run entry point. Modes:
@@ -114,7 +115,7 @@ object Main {
    * a fresh JVM per level (JIT fairness): see BASELINE.md.
    */
   private def scalingBench(nPages: Long, cores: String, outPath: String): Unit = {
-    import nelspark.gen.CorpusGen
+    import nelspark.gen.{CorpusGen, Fixtures}
     import nelspark.pipeline._
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.NelShim.waitForListenerBus
@@ -122,18 +123,19 @@ object Main {
     val cfg = ErConfig()
 
     // pre-stage (excluded from timing, shared by both levels): the
-    // fixture's mentions and page vectors, written once per fixture
+    // fixture's mentions and page vectors, pinned to the corpus, the
+    // config and the pipeline code that made them
     def preStage(n: Long): (DataFrame, DataFrame) = {
       val fixDir = s"target/fixtures/bench_$n"
-      CorpusGen.ensureFixture(spark, fixDir, n, n / 5)
-      val pre = s"$fixDir/pre"
-      if (!new java.io.File(s"$pre/_DONE").exists()) {
-        val prefix = new Linkage.Prefix(spark.read.parquet(s"$fixDir/pages.parquet"), cfg, _.frame)
-        prefix.mentions.write.mode("overwrite").parquet(s"$pre/mentions.parquet")
-        prefix.vectors.write.mode("overwrite").parquet(s"$pre/vecs.parquet")
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$pre/_DONE"), "ok")
+      val corpusTag = CorpusGen.ensureFixture(spark, fixDir, n, n / 5)
+      val pipelineHash = Fixtures.codeHash(Seq("nelspark/pipeline/"))
+      val pre = Fixtures.ensurePinned(s"$fixDir/pre",
+          Fixtures.tag(s"bench_pre:$corpusTag:$cfg:$pipelineHash")) { tmp =>
+        val prefix = new Linkage.Prefix(Parquet.read(spark, s"$fixDir/pages.parquet"), cfg, _.frame)
+        prefix.mentions.write.mode("overwrite").parquet(s"$tmp/mentions.parquet")
+        prefix.vectors.write.mode("overwrite").parquet(s"$tmp/vecs.parquet")
       }
-      (spark.read.parquet(s"$pre/mentions.parquet"), spark.read.parquet(s"$pre/vecs.parquet"))
+      (Parquet.read(spark, s"$pre/mentions.parquet"), Parquet.read(spark, s"$pre/vecs.parquet"))
     }
     // FUSED blocking → scoring → clustering as one linear DAG with no
     // mid-pipeline cache/count barriers (each barrier both serializes the
@@ -194,7 +196,7 @@ object Main {
     val gen = CorpusGen.generate(spark, 2000L, 400L).cache()
     val dir = "target/fixtures/explain"
     CorpusGen.pages(gen).write.mode("overwrite").parquet(s"$dir/pages.parquet")
-    val pages = spark.read.parquet(s"$dir/pages.parquet")
+    val pages = Parquet.read(spark, s"$dir/pages.parquet")
     val sb = new StringBuilder
     def put(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n==================== $name ====================\n")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.xbean.asm9.{ClassReader, ClassWriter}
 import nelspark.functions._
+import nelspark.util.Parquet
 
 /**
  * Pinned cross-engine fixtures: a deterministic artifact is
@@ -43,11 +44,14 @@ object Fixtures {
   private val kernelPackages = Seq("nelspark/expr/", "nelspark/ann/",
     "nelspark/media/", "nelspark/sources/", "nelspark/gen/")
 
-  /** [[classesHash]] of every compiled class under [[kernelPackages]]
-    * (sorted). Any recompile of fixture-producing code that changes its
-    * bytecode — even one producing subtly different hashes — yields a new
-    * tag. Works from a classes dir (sbt) or a jar (spark-submit). */
-  private lazy val kernelHash: String = {
+  /** [[codeHash]] of [[kernelPackages]]. Any recompile of
+    * fixture-producing code that changes its bytecode — even one
+    * producing subtly different hashes — yields a new tag. */
+  private lazy val kernelHash: String = codeHash(kernelPackages)
+
+  /** [[classesHash]] of every compiled class under `packages` (sorted),
+    * from a classes dir (sbt) or a jar (spark-submit). */
+  private[nelspark] def codeHash(packages: Seq[String]): String = {
     val loc = new File(nelspark.expr.Kernels.getClass
       .getProtectionDomain.getCodeSource.getLocation.toURI)
     import scala.jdk.CollectionConverters._
@@ -56,7 +60,7 @@ object Fixtures {
       // classes dir, so dir and jar execution hash the same class files
       // (subpackages included) in the same (global) order
       val base = loc.toPath
-      classesHash(kernelPackages.flatMap { pkg =>
+      classesHash(packages.flatMap { pkg =>
         val dir = base.resolve(pkg)
         if (!Files.isDirectory(dir)) Nil
         else {
@@ -70,7 +74,7 @@ object Fixtures {
     } else {
       val zip = new java.util.zip.ZipFile(loc)
       try classesHash(zip.entries().asScala
-        .filter(e => kernelPackages.exists(e.getName.startsWith) &&
+        .filter(e => packages.exists(e.getName.startsWith) &&
           e.getName.endsWith(".class"))
         .toSeq.sortBy(_.getName).iterator.map { e =>
           val is = zip.getInputStream(e)
@@ -106,11 +110,11 @@ object Fixtures {
       .mkString(",")
   }
 
-  /** The expected `_FIXTURE_TAG` value for (params, input). Exposed for
-    * the staleness spec. */
-  def tag(params: String, inputPath: String): String = {
+  /** The expected `_FIXTURE_TAG` value for (params, inputs); a generated
+    * fixture has no input. Exposed for the staleness spec. */
+  def tag(params: String, inputPaths: String*): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(s"$params|$kernelHash|${inputMeta(inputPath)}"
+    md.update(s"$params|$kernelHash|${inputPaths.map(inputMeta).mkString(";")}"
       .getBytes("UTF-8"))
     md.digest().map("%02x".format(_)).mkString
   }
@@ -163,8 +167,8 @@ object Fixtures {
   }
 
   /** Validate-or-regenerate: `gen` writes the fixture into the temp dir
-    * it is handed (and leaves a `_SUCCESS` there); the tag sidecar is
-    * added and the whole dir atomically renamed into place, so a reader
+    * it is handed; a `_SUCCESS` marker and the tag sidecar are added and
+    * the whole dir atomically renamed into place, so a reader
     * globbing the dir sees either the whole old or the whole new fixture.
     * Leftovers of dead runs are swept on every call. Returns `dir`. */
   def ensurePinned(dir: String, tagValue: String)(gen: String => Unit): String = {
@@ -173,6 +177,7 @@ object Fixtures {
       val pid = ProcessHandle.current().pid()
       val tmp = s"$dir.tmp.$pid"
       gen(tmp)
+      Files.write(Paths.get(tmp, "_SUCCESS"), Array.empty[Byte])
       Files.write(Paths.get(tmp, "_FIXTURE_TAG"),
         tagValue.getBytes("UTF-8"))
       try {
@@ -222,7 +227,7 @@ object Fixtures {
   def ensureMinhashBands(spark: SparkSession, docsParquet: String,
       dir: String): String =
     ensurePinned(dir, tag("minhash_bands:8:12:42:4", docsParquet)) { tmp =>
-      spark.read.parquet(docsParquet)
+      Parquet.read(spark, docsParquet)
         .select(col("doc_id"), posexplode(
           minhash_bands(
             minhash_ngrams(lower(col("text")), 8, 12, 42L), 4))
@@ -235,7 +240,7 @@ object Fixtures {
   def ensureFingerprints(spark: SparkSession, docsParquet: String,
       dir: String): String =
     ensurePinned(dir, tag("fingerprints:5", docsParquet)) { tmp =>
-      spark.read.parquet(docsParquet)
+      Parquet.read(spark, docsParquet)
         .select(col("doc_id"), doc_fingerprint(col("text"), 5).as("fp"))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
     }
@@ -245,7 +250,7 @@ object Fixtures {
   def ensureSimhash(spark: SparkSession, docsParquet: String,
       dir: String): String =
     ensurePinned(dir, tag("simhash:ws", docsParquet)) { tmp =>
-      spark.read.parquet(docsParquet)
+      Parquet.read(spark, docsParquet)
         .select(col("doc_id"),
           simhash64(split(lower(col("text")), "\\s+")).as("sh"))
         .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -261,7 +266,7 @@ object Fixtures {
   def ensureCorefMentions(spark: SparkSession, docsParquet: String,
       dir: String): String =
     ensurePinned(dir, tag("coref_mentions:v1", docsParquet)) { tmp =>
-      spark.read.parquet(docsParquet)
+      Parquet.read(spark, docsParquet)
         .withColumn("ctext", concat_ws(" ",
           transform(split(col("text"), "\\s+"), w =>
             when(w.isin("spark", "customer", "table", "window", "query"),
@@ -284,7 +289,7 @@ object Fixtures {
   def ensureLshBuckets(spark: SparkSession, embParquet: String,
       dir: String): String =
     ensurePinned(dir, tag("lsh_buckets:16:4:42", embParquet)) { tmp =>
-      spark.read.parquet(embParquet)
+      Parquet.read(spark, embParquet)
         .select(col("vec_id"), posexplode(
           nelspark.functions.sign_lsh_buckets(col("embedding"), 16, 4, 42L))
           .as(Seq("tbl", "bkt")))
@@ -304,7 +309,7 @@ object Fixtures {
   def ensureIvf(spark: SparkSession, embParquet: String,
       dir: String): String =
     ensurePinned(dir, tag("ivf:v1:16:2:42", embParquet)) { tmp =>
-      val corpus = spark.read.parquet(embParquet)
+      val corpus = Parquet.read(spark, embParquet)
         .select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
       val cent = nelspark.ann.Ann.trainIvf(corpus, nlist = 16, iters = 2,
         seed = 42L)
@@ -316,9 +321,6 @@ object Fixtures {
         element_at(nelspark.functions.nearest_cells(col("n_emb"), cent, 1), 1)
           .as("cell"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/cells")
-      // parquet wrote _SUCCESS inside the subdirs; tagOk wants one at the
-      // fixture root
-      Files.write(Paths.get(tmp, "_SUCCESS"), Array.empty[Byte]): Unit
     }
 
   /** Decoded media metadata of the documents-as-video payload set (the
@@ -332,7 +334,7 @@ object Fixtures {
   def ensureMediaMeta(spark: SparkSession, docsParquet: String,
       dir: String): String =
     ensurePinned(dir, tag("media_meta:video:v1", docsParquet)) { tmp =>
-      val media = spark.read.parquet(docsParquet)
+      val media = Parquet.read(spark, docsParquet)
         .select(col("doc_id").as("media_id"), lit("video").as("kind"),
           to_binary(col("text"), lit("utf-8")).as("payload"))
       nelspark.media.MediaOps.decodeMeta(media).toDF()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import java.nio.file.{Files, Paths}
 import nelspark.gen.Fixtures
+import nelspark.util.Parquet
 
 /**
  * SRC2/SRC3: gold-corpus TSV reader (the reference parses CoNLL-YAGO
@@ -44,7 +45,7 @@ object Conll {
     // covers nelspark/sources, so recompiled code here regenerates).
     Fixtures.ensurePinnedFiles(path + ".tag",
         Fixtures.tag(s"conll_tsv:v1:$nDocs", docsParquet), Seq(path)) {
-      val docs = spark.read.parquet(docsParquet).select("doc_id", "text")
+      val docs = Parquet.read(spark, docsParquet).select("doc_id", "text")
         .filter(col("doc_id") < nDocs).orderBy("doc_id").collect()
       val sb = new StringBuilder
       var ln = 0L
@@ -101,7 +102,6 @@ object Conll {
         val to = math.min((i + 1) * per, lines.size)
         Files.write(Paths.get(tmp, f"shard$i%03d.tsv"), lines.subList(from, to))
       }
-      Files.write(Paths.get(tmp, "_SUCCESS"), Array.empty[Byte]): Unit
     }
 
   /** Raw one-token-per-line TSV scan. Quoting and escaping are DISABLED

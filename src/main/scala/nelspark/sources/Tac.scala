@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import nelspark.gen.Fixtures
+import nelspark.util.Parquet
 
 /**
  * SRC3: TAC-KBP entity-linking corpus reader (the reference parses the
@@ -64,7 +65,7 @@ object Tac {
     // = this generator's contract version).
     Fixtures.ensurePinnedFiles(base + ".tag",
         Fixtures.tag(s"tac:v1:$nDocs", docsParquet), Seq(xp, lp, tp)) {
-      val docs = spark.read.parquet(docsParquet).select("doc_id", "text")
+      val docs = Parquet.read(spark, docsParquet).select("doc_id", "text")
         .filter(col("doc_id") < nDocs).orderBy("doc_id").collect()
       val xml = new StringBuilder("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<kbpentlink>\n")
       val links = new StringBuilder
@@ -116,7 +117,7 @@ object Tac {
     * docid carries the `DOC_<doc_id>` convention of the fixture. */
   def corpus(spark: SparkSession, xmlPath: String, linksPath: String,
       docsParquet: String): DataFrame = {
-    val docs = spark.read.parquet(docsParquet)
+    val docs = Parquet.read(spark, docsParquet)
       .select(col("doc_id"), size(split(trim(col("text")), "\\s+")).cast("long")
         .as("doc_tokens"))
     queries(spark, xmlPath)

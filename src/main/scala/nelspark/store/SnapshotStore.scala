@@ -1,10 +1,11 @@
 package nelspark.store
 
-import org.apache.hadoop.fs.Path
+import nelspark.util.Parquet
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.ParquetFileWriter
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{DataFrame, NelShim, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
@@ -22,8 +23,9 @@ import scala.jdk.CollectionConverters._
  *   root/_snapshots/<stage>-<id>.parquet          -- log row of the commit
  *   root/_lineage/<stage>-<id>.parquet            -- a row per written partition
  *   root/_metrics/<stage>-<id>.parquet            -- stage facts, if any
- * Each bookkeeping table is read as its whole directory, so stores whose
- * rows Spark appended as `part-*` files read the same.
+ * Each bookkeeping table is read from every data file its directory
+ * lists, so stores whose rows Spark appended as `part-*` files read the
+ * same.
  *
  * Resume contract: a stage snapshot is reusable iff its recorded
  * `conf` hash (pipeline config) and `input_snapshot` (the id of the
@@ -42,9 +44,10 @@ import scala.jdk.CollectionConverters._
  * run is not seen until the next run refreshes the copy.
  *
  * Spark jobs: a replay of the five pipeline stages runs one, the log
- * read; each snapshot is opened with the schema stored in its parquet
- * footer, which the driver reads itself. A stage commit runs exactly the
- * jobs of its data write. Everything it records comes out of that write:
+ * read; each snapshot is opened by [[nelspark.util.Parquet.read]], with
+ * the schema in its first part file's footer, read on the driver. A
+ * stage commit runs exactly the jobs of its data write. Everything it
+ * records comes out of that write:
  * the stage facts are observed (`Dataset.observe`) by the writing job,
  * and the row count of each written part file, read from its footer on
  * the driver, is the lineage row of the write task's partition. The
@@ -59,54 +62,36 @@ class SnapshotStore(spark: SparkSession, root: String) {
 
   private def dir(parts: String*): String = (root +: parts).mkString("/")
 
-  /** Existence through the root's Hadoop file system, so `file:`,
-    * `hdfs:` and `s3a:` roots are found as well as plain paths. */
-  private def exists(path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def readOpt(path: String, schema: => Option[StructType]): Option[DataFrame] =
-    if (exists(path))
-      try Some(schema.fold(spark.read)(spark.read.schema).parquet(path))
-      catch { case _: Exception => None }
-    else None
+  /** A bookkeeping table, opened from its listed data files with its
+    * fixed schema; None when it has none. Naming the files, not the
+    * `_`-prefixed directory, keeps Spark from logging that directory as
+    * an ignored hidden path; the listing skips in-flight `.`-named files.
+    * Spark lists more root paths than `parallelPartitionDiscoveryThreshold`
+    * with a job of its own, so the files are opened in groups of that
+    * many and the groups unioned. */
+  private def bookkeeping(table: String, schema: StructType): Option[DataFrame] =
+    Parquet.dataFiles(spark, dir(table)).map(_.getPath.toString)
+      .grouped(math.max(1, spark.sessionState.conf.parallelPartitionDiscoveryThreshold))
+      .map(spark.read.schema(schema).parquet(_: _*)).reduceOption(_ union _)
 
   /** The part files of a written snapshot directory. */
-  private def partFiles(path: String): Iterator[Path] = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).iterator
-      .map(_.getPath).filter(_.getName.startsWith("part-"))
-  }
-
-  private def footer[T](file: Path)(read: ParquetFileReader => T): T = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
-    try read(reader) finally reader.close()
-  }
-
-  /** The schema Spark stored in the footer of a snapshot's first part
-    * file, read on the driver: `spark.read.parquet` without a schema runs
-    * one inference job per read. None (so Spark infers) when the footer
-    * carries no Spark schema. */
-  private def footerSchema(path: String): Option[StructType] =
-    partFiles(path).nextOption()
-      .flatMap(footer(_)(r => Option(r.getFileMetaData.getKeyValueMetaData
-        .get(ParquetReadSupport.SPARK_METADATA_KEY))))
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+  private def partFiles(path: String): Seq[FileStatus] =
+    Parquet.dataFiles(spark, path).filter(_.getPath.getName.startsWith("part-"))
 
   /** Rows written by each write task of a snapshot, by partition id in
     * order, from the part files' footers: `part-<partition>-…`. Tasks
     * that wrote nothing have no row. */
   private def rowsByPartition(path: String): Seq[(Int, Long)] =
-    partFiles(path).toSeq
-      .map(f => (f.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt,
-        footer(f)(_.getRecordCount)))
+    partFiles(path)
+      .map(f => (f.getPath.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt,
+        Parquet.footer(spark, f).getBlocks.asScala.map(_.getRowCount).sum))
       .groupMapReduce(_._1)(_._2)(_ + _).toSeq
       .filter(_._2 > 0).sortBy(_._1)
 
-  /** A committed stage snapshot, read with its footer schema. */
-  private def readSnapshot(path: String): Option[DataFrame] = readOpt(path, footerSchema(path))
+  /** A committed stage snapshot, opened with its footer schema; None when
+    * it has no data file. */
+  private def readSnapshot(path: String): Option[DataFrame] =
+    Option.when(Parquet.dataFiles(spark, path).nonEmpty)(Parquet.read(spark, path))
 
   /** Driver-side copy of the `_snapshots` log; read on first use and by
     * [[refresh]]. */
@@ -123,7 +108,7 @@ class SnapshotStore(spark: SparkSession, root: String) {
   }
 
   /** The _snapshots log (None when no snapshot committed yet). */
-  def snapshots: Option[DataFrame] = readOpt(dir("_snapshots"), Some(LogSchema))
+  def snapshots: Option[DataFrame] = bookkeeping("_snapshots", LogSchema)
 
   /** The newest snapshot of `stage` built with `conf` from `inputSnapshot`. */
   def latest(stage: String, conf: String, inputSnapshot: Long): Option[(Long, DataFrame)] =
@@ -206,8 +191,8 @@ class SnapshotStore(spark: SparkSession, root: String) {
       facts: Option[Observation] = None)(compute: => DataFrame): (Long, DataFrame) =
     latest(stage, conf, inputSnapshot).getOrElse(commit(stage, compute, conf, inputSnapshot, facts))
 
-  def metrics: Option[DataFrame] = readOpt(dir("_metrics"), Some(MetricsSchema))
-  def lineage: Option[DataFrame] = readOpt(dir("_lineage"), Some(LineageSchema))
+  def metrics: Option[DataFrame] = bookkeeping("_metrics", MetricsSchema)
+  def lineage: Option[DataFrame] = bookkeeping("_lineage", LineageSchema)
 }
 
 object SnapshotStore {

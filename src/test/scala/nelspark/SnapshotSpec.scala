@@ -172,6 +172,17 @@ class SnapshotSpec extends SparkSpec {
     }
   }
 
+  test("a log of more files than Spark lists on the driver is read in one job") {
+    val root = tmpRoot()
+    new SnapshotStore(spark, root).commit("s", spark.range(3).toDF(), conf = "c")
+    val log = java.nio.file.Paths.get(root, "_snapshots")
+    for (i <- 2 to 40) Files.copy(log.resolve("s-1.parquet"), log.resolve(s"s-$i.parquet"))
+    val store = new SnapshotStore(spark, root)
+    val (_, jobs) = jobDescriptions(store.refresh())
+    assert(jobs.size == 1, jobs)
+    assert(store.snapshots.get.count() == 40L)
+  }
+
   test("a commit launches exactly the jobs of a plain write of its frame") {
     val store = new SnapshotStore(spark, tmpRoot())
     store.refresh()
